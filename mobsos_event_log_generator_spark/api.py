@@ -17,6 +17,7 @@ scope; any WSGI layer can map these calls/exceptions 1:1.
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass, replace
 from datetime import datetime
 from typing import Any
@@ -24,9 +25,13 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from mobsos_event_log_generator_spark.cache import ArtifactCache
-from mobsos_event_log_generator_spark.operators.traces import is_empty
+
+# The request path does not call ``is_empty`` (emptiness comes from the XES
+# stream); the name stays bound because perfbench's tracer wraps
+# build_eventlog, is_empty and write_xes in this module by name.
+from mobsos_event_log_generator_spark.operators.traces import is_empty  # noqa: F401
 from mobsos_event_log_generator_spark.plans.eventlog import EventLogParams, build_eventlog
-from mobsos_event_log_generator_spark.sinks.xes import write_xes
+from mobsos_event_log_generator_spark.sinks.xes import write_xes, xes_trace_stream
 from mobsos_event_log_generator_spark.sources.rest import fetch_bots, resolve_bot_resources
 
 
@@ -86,11 +91,16 @@ class EventLogService:
         # (event_reader.py:26-29 — computed, never used; we expose them as
         # operators/traces.py::global_time_bounds but take no default from
         # them), and its emptiness check tests the wrong variable
-        # (app.py:93); is_empty() here checks the actual filtered log.
-        if is_empty(log):
-            raise EmptyEventLog()
+        # (app.py:93). Here emptiness is read off the result itself: the
+        # first trace of the filtered log's XES stream, so no separate scan
+        # job runs, and an empty log never opens a file.
+        traces = xes_trace_stream(log)
+        try:
+            first = next(traces)
+        except StopIteration:
+            raise EmptyEventLog() from None
         out = self.cache.path_for(cache_params)
-        write_xes(log, out, single_file=True)
+        write_xes(itertools.chain((first,), traces), out, single_file=True)
         return out
 
     def resource(

@@ -14,17 +14,26 @@ Two sink modes:
 * ``single_file=True`` — one valid XES document; trace XML strings are
   streamed through ``toLocalIterator`` (bounded driver memory — never a full
   ``collect``) into one file. For interactive/e2e parity with the reference.
+  ``xes_trace_stream`` exposes that stream, so a caller can look at the first
+  trace (is the log empty?) before anything is written.
 * ``single_file=False`` — the 100 TB path: traces are hash-distributed and
   each partition writes one complete, independently-parseable XES file
   (``part-*.xes``) via ``mapPartitions`` (Python touches only partition-sized
   string batches, not rows).
+
+Both modes publish atomically: a document is written under a temporary name
+that does not end in ``.xes`` and moved into place with ``os.replace``, so a
+reader never sees a truncated file under the final name.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import html
 import os
-from collections.abc import Iterator
+import tempfile
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +56,10 @@ XES_FOOTER = "</log>\n"
 
 # ISO-8601 with microseconds; UTC offset rendered by Spark's XXX pattern.
 _ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
+# The process umask, read once: published files get the mode open() gives.
+_UMASK = os.umask(0)
+os.umask(_UMASK)
 
 
 def _xml_escape(col: Column) -> Column:
@@ -141,10 +154,21 @@ def traces_to_xml(
     if event_attrs is None:
         event_attrs = [c for c in df.columns if c not in (case_col, ts_col, activity_col)]
     dtypes = dict(df.dtypes)
-    attr_tags = {name: _xes_tag(dtypes.get(name, "string")) for name in event_attrs}
+    tags = tuple(_xes_tag(dtypes.get(name, "string")) for name in event_attrs)
     traces = assemble_traces(df, case_col, ts_col, activity_col, event_cols=[ts_col, activity_col, *event_attrs])
-    event_xml = F.array_join(F.transform(F.col("events"), lambda e: _event_xml(e, event_attrs, attr_tags)), "")
-    trace_xml = F.concat(
+    return traces.select(F.col("case"), _trace_xml(tuple(event_attrs), tags).alias("xml"))
+
+
+@functools.lru_cache(maxsize=64)
+def _trace_xml(event_attrs: tuple[str, ...], tags: tuple[str, ...]) -> Column:
+    """The ``<trace>`` XML Column over ``assemble_traces`` output, built once
+    per attribute signature. Building it takes about 250 py4j calls (0.15 s
+    on a 4-core host); the result is an unresolved expression with no
+    session or data in it, so every DataFrame with the same attribute names
+    and types can share it."""
+    attr_tags = dict(zip(event_attrs, tags))
+    event_xml = F.array_join(F.transform(F.col("events"), lambda e: _event_xml(e, list(event_attrs), attr_tags)), "")
+    return F.concat(
         F.lit("\t<trace>\n"),
         F.lit('\t\t<string key="concept:name" value="'),
         _xml_escape(F.col("case")),
@@ -152,11 +176,53 @@ def traces_to_xml(
         event_xml,
         F.lit("\t</trace>\n"),
     )
-    return traces.select(F.col("case"), trace_xml.alias("xml"))
+
+
+def xes_trace_stream(
+    df: DataFrame,
+    case_col: str = XES_CASE,
+    ts_col: str = XES_TIMESTAMP,
+    activity_col: str = XES_ACTIVITY,
+    event_attrs: list[str] | None = None,
+) -> Iterator[str]:
+    """The ``<trace>`` XML strings of ``df``'s log, streamed to the driver a
+    partition at a time. Lazy: no Spark job starts before the first
+    ``next()``. ``write_xes`` accepts the stream (also once started) in place
+    of the DataFrame."""
+    xml_df = traces_to_xml(df, case_col, ts_col, activity_col, event_attrs).select("xml")
+    for row in xml_df.toLocalIterator(prefetchPartitions=True):
+        yield row["xml"]
+
+
+def _write_file(traces: Iterable[str], path: str) -> int:
+    """Write one XES document to ``path`` atomically; returns the trace count.
+
+    The document goes to a ``mkstemp`` file in the target directory (its
+    name does not end in ``.xes``) and replaces ``path`` only once complete,
+    so a crashed or concurrent writer never exposes a truncated log. On any
+    error the temporary file is removed and the error re-raised."""
+    directory = os.path.dirname(os.path.abspath(path))
+    os.makedirs(directory, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=directory, prefix=".xes-", suffix=".tmp")
+    written = 0
+    try:
+        with os.fdopen(fd, "w", encoding="utf-8") as f:
+            os.fchmod(fd, 0o666 & ~_UMASK)  # mkstemp creates 0600; keep open()'s mode
+            f.write(XES_HEADER)
+            for xml in traces:
+                f.write(xml)
+                written += 1
+            f.write(XES_FOOTER)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+    return written
 
 
 def write_xes(
-    df: DataFrame,
+    df: DataFrame | Iterable[str],
     path: str,
     case_col: str = XES_CASE,
     ts_col: str = XES_TIMESTAMP,
@@ -164,41 +230,55 @@ def write_xes(
     event_attrs: list[str] | None = None,
     single_file: bool = True,
     num_shards: int | None = None,
-) -> None:
-    """Write a pm4py-parseable XES log.
+) -> int:
+    """Write a pm4py-parseable XES log; returns the number of traces written.
 
+    ``df`` is a normalized-log DataFrame, or (single file only) the
+    ``<trace>`` strings of ``xes_trace_stream``.
     ``single_file=True`` → ``path`` is one ``.xes`` file (driver-streamed).
     ``single_file=False`` → ``path`` is a directory of ``part-*.xes`` shards,
     each a complete XES document (case-hash partitioned, order-independent).
     """
-    xml_df = traces_to_xml(df, case_col, ts_col, activity_col, event_attrs)
+    if not isinstance(df, DataFrame):
+        if not single_file:
+            raise ValueError("a trace stream can only be written as a single file")
+        return _write_file(df, path)
     if single_file:
-        os.makedirs(os.path.dirname(os.path.abspath(path)) or ".", exist_ok=True)
-        with open(path, "w", encoding="utf-8") as f:
-            f.write(XES_HEADER)
-            for row in xml_df.select("xml").toLocalIterator(prefetchPartitions=True):
-                f.write(row["xml"])
-            f.write(XES_FOOTER)
-        return
+        return _write_file(xes_trace_stream(df, case_col, ts_col, activity_col, event_attrs), path)
 
+    xml_df = traces_to_xml(df, case_col, ts_col, activity_col, event_attrs)
     shards = num_shards or xml_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     os.makedirs(path, exist_ok=True)
 
-    def _emit(partition_index: int, rows: Iterator) -> Iterator[str]:
-        # Python only concatenates partition-sized string batches here.
-        out = os.path.join(path, f"part-{partition_index:05d}.xes")
-        wrote = False
-        with open(out, "w", encoding="utf-8") as f:
-            f.write(XES_HEADER)
-            for row in rows:
-                f.write(row.xml)
-                wrote = True
-            f.write(XES_FOOTER)
-        if not wrote:
-            os.remove(out)
-        return iter(())
+    def _emit(partition_index: int, rows: Iterator) -> Iterator[int]:
+        # Python only concatenates partition-sized string batches here. Each
+        # attempt writes its own temporary file, so a retried or speculative
+        # task never leaves a half-written part-*.xes behind.
+        from pyspark import TaskContext
 
-    xml_df.repartition(int(shards), "case").rdd.mapPartitionsWithIndex(_emit).count()
+        out = os.path.join(path, f"part-{partition_index:05d}.xes")
+        tmp = f"{out}.{TaskContext.get().attemptNumber()}.tmp"
+        written = 0
+        try:
+            with open(tmp, "w", encoding="utf-8") as f:
+                f.write(XES_HEADER)
+                for row in rows:
+                    f.write(row.xml)
+                    written += 1
+                f.write(XES_FOOTER)
+            if written:
+                os.replace(tmp, out)
+            else:
+                os.remove(tmp)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(out)  # a stale shard of an earlier export
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
+        yield written
+
+    return xml_df.repartition(int(shards), "case").rdd.mapPartitionsWithIndex(_emit).sum()
 
 
 def _convert_xes_value(tag: str, value: str):

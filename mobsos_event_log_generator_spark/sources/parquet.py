@@ -9,6 +9,7 @@ and at 100 TB the event table is expected to be date-partitioned
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,9 +37,11 @@ KNOWN_TABLES = (
 #: of the cold lane). A DataFrame is an immutable LAZY plan: memoizing it
 #: caches no data and no results — every action still scans the parquet
 #: files — so this is a schema/plan cache, not result caching. Keyed by
-#: (applicationId, absolute path, mtime, size): a new session or a changed
-#: file misses, the dict dies with the process.
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
+#: (session, applicationId, absolute path, mtime, size): another session or
+#: a changed file misses. An LRU bounded to a few times ``KNOWN_TABLES``, so
+#: a long-lived service that sees many file versions or sessions does not
+#: grow it without limit.
+_PLAN_MEMO_SIZE = 4 * len(KNOWN_TABLES)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,16 +68,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            st.st_mtime_ns,
-            st.st_size,
-        )
     except OSError:  # non-local path: no memo
-        key = None
-    if key is not None and key in _PLAN_MEMO:
-        return _PLAN_MEMO[key]
+        return _read_table(spark, path, name)
+    return _memo_table(spark, spark.sparkContext.applicationId, os.path.abspath(path), st.st_mtime_ns,
+                       st.st_size, name)
+
+
+@functools.lru_cache(maxsize=_PLAN_MEMO_SIZE)
+def _memo_table(spark: SparkSession, app_id: str, path: str, mtime_ns: int, size: int, name: str) -> DataFrame:
+    """``_read_table`` memoized; the session object itself is part of the key."""
+    return _read_table(spark, path, name)
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # Integer div: epoch-nanos (~1.7e18) exceeds double's exact range.
@@ -88,8 +94,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 for f in df.schema.fields
             ]
         )
-    if key is not None:
-        _PLAN_MEMO[key] = df
     return df
 
 

@@ -4,7 +4,9 @@
 from __future__ import annotations
 
 import os
+import threading
 import time
+import uuid
 from datetime import datetime
 
 import pytest
@@ -19,6 +21,8 @@ ROWS = [
     ("SERVICE_CUSTOM_MESSAGE_3", "c1", "svc", datetime(2024, 1, 1, 10, 0, 5), "complete", "r1", "bot", "{}"),
     ("SERVICE_CUSTOM_MESSAGE_1", "c2", "ask", datetime(2024, 1, 2, 9, 0, 0), "complete", "r2", "service", "{}"),
 ]
+
+CASE_EVENTS = {"c1": 2, "c2": 1}
 
 PAYLOAD = {"r1": {"name": "menuBot"}, "r2": {"name": "otherBot"}}
 
@@ -55,6 +59,64 @@ def test_bot_endpoint_resolution(service):
 def test_empty_result_raises_204(service):
     with pytest.raises(EmptyEventLog):
         service.resource("r1", start_date=datetime(2030, 1, 1))
+
+
+def test_empty_request_leaves_no_file(service):
+    with pytest.raises(EmptyEventLog):
+        service.resources(["r1", "r2"], start_date=datetime(2030, 1, 1), use_cache=True)
+    assert os.listdir(service.cache.cache_dir) == []
+
+
+#: Spark jobs of one non-empty E1 request on the fixture above. The version
+#: that ran a separate ``isEmpty()`` job before streaming measured 3 (the
+#: emptiness job, then the shuffle-map and result jobs of the XES stream);
+#: emptiness now comes from the stream's first trace, so it is 3 - 1.
+REQUEST_JOBS = 2
+
+
+def test_request_runs_no_separate_emptiness_job(spark, service):
+    sc = spark.sparkContext
+    group = f"request-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one E1 request")
+    try:
+        path = service.resource("r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == REQUEST_JOBS
+    assert {t["attrs"]["concept:name"] for t in read_xes(path)} == {"c1"}
+
+
+def test_concurrent_requests_publish_complete_artifacts(service):
+    """Four threads send same-key and different-key requests, with and
+    without the cache; every returned path parses and holds its traces."""
+    calls = [
+        (["r1"], False, {"c1"}),
+        (["r1"], True, {"c1"}),
+        (["r1", "r2"], False, {"c1", "c2"}),
+        (["r2"], True, {"c2"}),
+    ]
+    barrier = threading.Barrier(len(calls), timeout=60)
+    errors: list[BaseException] = []
+
+    def client(ids: list[str], use_cache: bool, want: set[str]) -> None:
+        try:
+            barrier.wait()
+            for _ in range(3):
+                path = service.resources(ids, use_cache=use_cache)
+                sizes = {t["attrs"]["concept:name"]: len(t["events"]) for t in read_xes(path)}
+                assert sizes == {case: CASE_EVENTS[case] for case in want}
+        except BaseException as ex:  # surfaced in the main thread
+            errors.append(ex)
+
+    threads = [threading.Thread(target=client, args=c) for c in calls]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert all(name.endswith(".xes") for name in os.listdir(service.cache.cache_dir))
 
 
 def test_cache_hit_skips_recompute(service):

@@ -259,3 +259,15 @@ def test_zorder_layout_tightens_minmax_on_both_dims(spark, tmp_path):
     # time-sorted files see nearly ALL users (range ~63); z-ordered files see
     # a contiguous slice of the user space
     assert sum(z_user) / len(z_user) < 0.5 * sum(t_user) / len(t_user)
+
+
+def test_load_table_plan_memo_is_per_session_and_bounded(spark, sf_dir):
+    from mobsos_event_log_generator_spark.sources.parquet import KNOWN_TABLES, _memo_table
+
+    first = load_table(spark, sf_dir, "nation")
+    assert load_table(spark, sf_dir, "nation") is first
+    other = spark.newSession()
+    theirs = load_table(other, sf_dir, "nation")
+    assert theirs is not first and theirs.sparkSession is other
+    maxsize = _memo_table.cache_info().maxsize
+    assert maxsize is not None and maxsize > len(KNOWN_TABLES)

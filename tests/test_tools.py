@@ -84,7 +84,8 @@ def test_bench_warm_delta_flags(monkeypatch):
 
     monkeypatch.setattr(
         bench, "_prev_bench",
-        lambda: ("BENCH_rX.json", {"queries": {"q": 1.0}, "queries_warm": {"q": 1.0, "r": 2.0}}),
+        lambda: ("BENCH_rX.json", {"queries": {"q": 1.0}, "queries_warm": {"q": 1.0, "r": 2.0},
+                                   "cpus": bench._cpus()}),
     )
     deltas, regs = bench._deltas_vs_prev({"q": 1.2}, {"q": 1.5, "r": 2.1})
     assert deltas["q"] == {"cold_pct": 20.0, "warm_pct": 50.0}

@@ -57,6 +57,70 @@ def test_sharded_write_each_file_valid(normalized, tmp_path):
     assert all_cases == {"c1", "c2"}
 
 
+def test_write_returns_trace_count_and_leaves_no_temp_files(normalized, tmp_path):
+    assert write_xes(normalized, str(tmp_path / "one" / "log.xes"), single_file=True) == 2
+    assert os.listdir(tmp_path / "one") == ["log.xes"]
+    out = tmp_path / "shards"
+    assert write_xes(normalized, str(out), single_file=False, num_shards=4) == 2
+    assert all(f.startswith("part-") and f.endswith(".xes") for f in os.listdir(out))
+
+
+def _failing_stream(normalized):
+    """The log's trace stream, raising after its first trace."""
+    from mobsos_event_log_generator_spark.sinks.xes import xes_trace_stream
+
+    traces = xes_trace_stream(normalized)
+    yield next(traces)
+    raise RuntimeError("stream failed midway")
+
+
+def test_failed_stream_leaves_neither_final_nor_temp_file(normalized, tmp_path):
+    path = tmp_path / "log.xes"
+    with pytest.raises(RuntimeError, match="midway"):
+        write_xes(_failing_stream(normalized), str(path))
+    assert os.listdir(tmp_path) == []
+
+
+def test_failed_stream_keeps_the_published_artifact(normalized, tmp_path):
+    """Overwriting an artifact (``use_cache=False`` on a cached key) with a
+    write that fails leaves the earlier, complete document in place."""
+    path = str(tmp_path / "log.xes")
+    write_xes(normalized, path)
+    before = open(path, encoding="utf-8").read()
+    with pytest.raises(RuntimeError):
+        write_xes(_failing_stream(normalized), path)
+    assert open(path, encoding="utf-8").read() == before
+    assert os.listdir(tmp_path) == ["log.xes"]
+
+
+def test_started_stream_writes_the_same_bytes(normalized, tmp_path):
+    """A stream whose first trace was already taken (the API's emptiness
+    probe) publishes the same document as the DataFrame path."""
+    import itertools
+
+    from mobsos_event_log_generator_spark.sinks.xes import xes_trace_stream
+
+    whole = str(tmp_path / "whole.xes")
+    write_xes(normalized, whole)
+    traces = xes_trace_stream(normalized)
+    first = next(traces)
+    resumed = str(tmp_path / "resumed.xes")
+    assert write_xes(itertools.chain((first,), traces), resumed) == 2
+    assert _split_xes(open(resumed, encoding="utf-8").read()) == _split_xes(open(whole, encoding="utf-8").read())
+    with pytest.raises(ValueError):
+        write_xes(iter(()), str(tmp_path / "shards"), single_file=False)
+
+
+def test_trace_xml_expression_built_once_per_signature(normalized):
+    from mobsos_event_log_generator_spark.sinks.xes import _trace_xml, traces_to_xml
+
+    traces_to_xml(normalized)
+    hits = _trace_xml.cache_info().hits
+    a = traces_to_xml(normalized).collect()
+    assert _trace_xml.cache_info().hits == hits + 1
+    assert sorted(a) == sorted(traces_to_xml(normalized.select("*")).collect())
+
+
 def test_xml_stays_jvm_side(normalized):
     """The trace→XML expression must compile to JVM ops (no BatchEvalPython)."""
     from mobsos_event_log_generator_spark.sinks.xes import traces_to_xml
