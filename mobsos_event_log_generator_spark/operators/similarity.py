@@ -918,7 +918,13 @@ def ivf_seed_centroids(
     vectors with the smallest md5(id) — a pseudo-random sample with no RNG
     state, reproducible on any engine. ORDER BY + LIMIT compiles to
     TakeOrderedAndProject (per-partition top-k, no global sort shuffle).
-    Returns (cid, cvec) with cvec as rounded doubles."""
+    Returns (cid, cvec) with cvec as rounded doubles.
+
+    The cid ``row_number`` is a partition-less window, but over at most
+    ``num_centroids`` rows: it sits directly on the post-LIMIT seed table.
+    Any oracle-gated query whose executed plan exposes it (no checkpoint
+    between the seeds and the consumer) must be listed in
+    ``GLOBAL_WINDOW_ALLOWLIST`` (tests/test_plans.py)."""
     seeds = (
         corpus.select(
             F.col(id_col).alias("sid"),

@@ -113,6 +113,13 @@ GLOBAL_WINDOW_ALLOWLIST = {
     "tables for the coarse quantizer and the PQ codebook",
     "embedding_kmeans_convergence": "same IVF seeding window: post-LIMIT "
     "centroid table (one per replayed Lloyd iteration)",
+    "corpus_hard_negatives": "same IVF seeding window: row_number directly over "
+    "TakeOrderedAndProject(limit=num_centroids=8) seed table (per-cell kNN)",
+    "embedding_label_knn_audit": "same IVF seeding window: row_number directly "
+    "over TakeOrderedAndProject(limit=num_centroids=8) seed table (per-cell kNN)",
+    "embedding_outlier_kdist": "same IVF seeding windows (two): row_number "
+    "directly over TakeOrderedAndProject(limit=num_centroids=8) seed tables "
+    "(per-cell kNN)",
     "eventlog_alignment_cost": "activity-alphabet code window: row_number over "
     "DISTINCT activities (alphabet-bounded input)",
     "orders_revenue_drawdown": "cumulative sum / running max over the per-day "
@@ -439,6 +446,7 @@ _BROADCAST_HINT_ALLOWLIST = {
     ("operators/similarity.py", "cb"): (2, "PQ codebook: m_subspaces x num_codes rows"),
     ("operators/similarity.py", "dtab"): (2, "queries x m_subspaces x num_codes ADC table (query set bounded by API contract)"),
     ("operators/similarity.py", "qv"): (2, "caller-provided query vectors (API contract: bounded workload)"),
+    ("operators/similarity.py", "sel_df"): (1, "kcenter_select join fallback: vectors selected so far, <= k - 1 rows (caller-set k)"),
     (
         "operators/similarity.py",
         'ivf_assign(queries, cents, nprobe, id_col, vec_col, dim).select( F.col(id_col).alias("query_id"), "cid" )',
@@ -485,6 +493,7 @@ _BROADCAST_HINT_ALLOWLIST = {
     ("plans/llm.py", "cov"): (2, "1-row coverage / covered-pair scalars"),
     ("plans/llm.py", "span"): (1, "1-row span bounds"),
     ("plans/llm.py", "n"): (1, "1-row doc count"),
+    ("plans/llm.py", "nrow"): (2, "1-row kind='n' count of the aggregated gram_partials output (dim correlation, CKA views)"),
     ("plans/llm.py", "qv"): (1, "caller-bounded query vectors (every-50th-id sample)"),
     ("plans/procmining.py", "total"): (1, "1-row scalar"),
     ("plans/procmining.py", "alpha"): (1, "activity-alphabet code map (bounded)"),
