@@ -84,6 +84,10 @@ class EventLogService:
             hit = self.cache.lookup(cache_params)
             if hit:
                 return hit
+        # Per request this binds only the ids (F2) and the window (F5): the
+        # flag-dependent normalization is memoized in build_eventlog, and the
+        # trace and XML Columns in the sink, so after the first request of a
+        # flag signature the driver issues about a quarter of the py4j calls.
         log = build_eventlog(self.events, params)
         # Intended-semantics divergences from the reference (full list:
         # SURVEY.md §7.4.3, mapped per-operator in COVERAGE.md A1/A3):

@@ -63,15 +63,17 @@ def timestamp_between(
     start: datetime | str | None,
     end: datetime | str | None,
     ts_col: str = "TIME_STAMP",
-) -> Column:
+) -> Column | None:
     """F5 — closed-interval timestamp range, each bound optional
-    (event_reader.py:64-69). On a date-partitioned lake table this predicate
-    also prunes partitions."""
-    pred = F.lit(True)
+    (event_reader.py:64-69); ``None`` when neither bound is given, so the
+    caller adds no filter at all. On a date-partitioned lake table this
+    predicate also prunes partitions."""
+    pred = None
     if start is not None:
-        pred = pred & (F.col(ts_col) >= F.lit(start))
+        pred = F.col(ts_col) >= F.lit(start)
     if end is not None:
-        pred = pred & (F.col(ts_col) <= F.lit(end))
+        upper = F.col(ts_col) <= F.lit(end)
+        pred = upper if pred is None else pred & upper
     return pred
 
 

@@ -3,14 +3,29 @@
 ``EventLogParams`` mirrors ``generate_eventlog(db_connection, start_date,
 end_date, resource_ids, include_bot_messages, include_life_cycle_start,
 deserialize_remarks)`` (reference: event_log_generator/event_reader.py:7), and
-``build_eventlog`` reproduces the full E1/E2 pipeline (SURVEY.md §3):
+``build_eventlog`` reproduces the full E1/E2 pipeline (SURVEY.md §3) in two
+parts:
 
-    scan → F1 case-not-null → F2 resource IN → F3 raw bot-exclude → F5 ts-range
-         → P2 recode → F6 keep user/service → F7 complete-only
-         → P1 rename to XES → P3 cast ts → P5 flatten remarks → P4 fillna
+    normalization, memoized per (events, flag signature):
+        scan → F1 case-not-null → F3 raw bot-exclude → F4 lifecycle-not-start
+             → P2 recode → F6 keep user/service → P1 rename to XES
+             → F7 complete-only → P3 cast ts → P5 flatten remarks → P4 fillna
+    request predicate, applied last:
+        → F5 ts-range on ``time:timestamp`` → F2 resource IN
+
+The reference applies F2 and F5 before the projections. No step rewrites
+``RESOURCE`` or the timestamp value (P3 casts only a column that is not
+already TIMESTAMP), so both commute with the rest, and
+Catalyst pushes them into the same scan ``Filter`` as before (only the
+conjunct order differs). What depends on the request's ids and window is
+therefore two filters; everything else depends only on the three flags and
+the deployment's mappings — at most 8 signatures per table — and is built
+once. Building it costs a few hundred py4j calls per request; a memo hit
+costs none.
 
 All of it is lazy Column algebra — Catalyst fuses the filters, pushes them into
-the scan, and prunes columns; nothing materializes until the sink.
+the scan, and prunes columns; nothing materializes until the sink. The memo
+holds lazy plans only, never data.
 
 Known reference quirks intentionally NOT reproduced (SURVEY.md §7.4): the
 always-on cache, wrong-dir cache probe, wrong empty-check variable, and the
@@ -20,6 +35,7 @@ Catalyst collapses it for free.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -32,6 +48,7 @@ from mobsos_event_log_generator_spark.schema import (
     BOT_RAW_EVENT_TYPE,
     EVENT_TYPE_RECODE,
     XES_LIFECYCLE,
+    XES_TIMESTAMP,
 )
 
 
@@ -52,48 +69,61 @@ class EventLogParams:
     remarks_keys: list[str] = field(default_factory=list)
 
 
+#: Bound of the normalization memo: 8 flag signatures for each of a few
+#: event tables (or mapping variants) a process serves.
+_NORMALIZED_MEMO_SIZE = 32
+
+
 def build_eventlog(events: DataFrame, params: EventLogParams) -> DataFrame:
     """E1/E2 semantics over an EVENTLOG-schema DataFrame → XES-convention DataFrame."""
-    df = events.filter(Fi.case_not_null())  # F1
+    df = _normalized(events, *_signature(params))
+    window = Fi.timestamp_between(params.start_date, params.end_date, XES_TIMESTAMP)
+    if window is not None:  # F5
+        df = df.filter(window)
     if params.resource_ids is not None:  # F2
         df = Fi.filter_resources(df, params.resource_ids)
-    if not params.include_bot_messages:  # F3 (pre-recode, in-SQL in reference)
-        df = df.filter(Fi.exclude_raw_bot_events(params.raw_bot_code))
-    if not params.include_life_cycle_start:  # F4
-        df = df.filter(Fi.exclude_lifecycle_start())
-    df = df.filter(Fi.timestamp_between(params.start_date, params.end_date))  # F5
-
-    df = df.withColumn("EVENT_TYPE", Tr.recode_event_type(params.recode_map))  # P2
-    if not params.include_bot_messages:  # F6 (post-recode keep-list)
-        df = df.filter(Fi.keep_user_and_service_events())
-
-    df = Tr.rename_to_xes(df)  # P1
-    if not params.include_life_cycle_start:  # F7 (reference re-applies post-rename)
-        df = df.filter(Fi.lifecycle_complete_only(XES_LIFECYCLE))
-    df = Tr.cast_timestamp(df)  # P3
-    if params.deserialize_remarks and params.remarks_keys:  # P5
-        df = Tr.flatten_remarks(df, params.remarks_keys)
-    df = Tr.fill_defaults(df)  # P4
     return df
 
 
-def resolve_and_build_for_bot(
+def _signature(params: EventLogParams) -> tuple:
+    """The hashable part of ``params`` the normalization depends on."""
+    remarks = tuple(params.remarks_keys) if params.deserialize_remarks else ()
+    return (params.include_bot_messages, params.include_life_cycle_start, remarks,
+            tuple(params.recode_map.items()), params.raw_bot_code)
+
+
+@functools.lru_cache(maxsize=_NORMALIZED_MEMO_SIZE)
+def _normalized(
     events: DataFrame,
-    bot_name: str,
-    bots_payload: object,
-    params: EventLogParams,
+    include_bot_messages: bool,
+    include_life_cycle_start: bool,
+    remarks_keys: tuple[str, ...],
+    recode_items: tuple[tuple[str, str], ...],
+    raw_bot_code: str,
 ) -> DataFrame:
-    """E3 semantics (``GET /bot/<botName>``, app.py:130-170): resolve the bot's
-    resource ids from the bot-manager payload, then run E2. Raises ValueError
-    when no ids resolve (reference maps this to HTTP 500, app.py:149-150)."""
-    from dataclasses import replace
+    """Every step except F2 and F5, memoized; the ``events`` object itself is
+    part of the key, so another table or session misses. A hit hands the same
+    DataFrame to every caller: it is immutable, and ``cache()`` acts on the
+    plan, which equal plans shared before too. An entry keeps its ``events``
+    plan alive (for a plan over local rows, those rows)."""
+    df = events.filter(Fi.case_not_null())  # F1
+    if not include_bot_messages:  # F3 (pre-recode, in-SQL in reference)
+        df = df.filter(Fi.exclude_raw_bot_events(raw_bot_code))
+    if not include_life_cycle_start:  # F4
+        df = df.filter(Fi.exclude_lifecycle_start())
 
-    from mobsos_event_log_generator_spark.sources.rest import resolve_bot_resources
+    df = df.withColumn("EVENT_TYPE", Tr.recode_event_type(dict(recode_items)))  # P2
+    if not include_bot_messages:  # F6 (post-recode keep-list)
+        df = df.filter(Fi.keep_user_and_service_events())
 
-    ids = resolve_bot_resources(bots_payload, bot_name)
-    if not ids:
-        raise ValueError(f"no resource ids resolved for bot {bot_name!r}")
-    return build_eventlog(events, replace(params, resource_ids=ids))
+    df = Tr.rename_to_xes(df)  # P1
+    if not include_life_cycle_start:  # F7 (reference re-applies post-rename)
+        df = df.filter(Fi.lifecycle_complete_only(XES_LIFECYCLE))
+    df = Tr.cast_timestamp(df)  # P3
+    if remarks_keys:  # P5
+        df = Tr.flatten_remarks(df, list(remarks_keys))
+    df = Tr.fill_defaults(df)  # P4
+    return df
 
 
 def events_fixture_as_eventlog(events: DataFrame) -> DataFrame:

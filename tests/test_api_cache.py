@@ -50,6 +50,12 @@ def test_resources_endpoint_multi(service):
 def test_bot_endpoint_resolution(service):
     path = service.bot("menuBot", bots_payload=PAYLOAD)
     assert {t["attrs"]["concept:name"] for t in read_xes(path)} == {"c1"}
+    # malformed entries are skipped, not fatal (app.py:256-261)
+    malformed = {**PAYLOAD, "r3": "not-a-dict", "r4": {"noname": True}}
+    path = service.bot("menuBot", bots_payload=malformed)
+    assert {t["attrs"]["concept:name"] for t in read_xes(path)} == {"c1"}
+    with pytest.raises(RuntimeError):
+        service.bot("menuBot", bots_payload="not-a-dict")  # malformed payload resolves nothing
     with pytest.raises(ValueError):
         service.bot("menuBot")  # no url, no payload -> 400
     with pytest.raises(RuntimeError):
@@ -85,6 +91,44 @@ def test_request_runs_no_separate_emptiness_job(spark, service):
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == REQUEST_JOBS
     assert {t["attrs"]["concept:name"] for t in read_xes(path)} == {"c1"}
+
+
+#: py4j calls (Python -> JVM) from ``_generate`` through the first trace of
+#: a request whose flag signature was already served. Building the
+#: flag-dependent pipeline and the trace Columns anew took 718 calls for the
+#: request below; binding only F2/F5 to the memoized plan takes 179. The
+#: bound leaves about 1.5x headroom.
+REQUEST_PY4J_CALLS = 270
+
+
+def test_request_py4j_calls_bounded(spark, service, monkeypatch):
+    from py4j.java_gateway import GatewayClient
+
+    from mobsos_event_log_generator_spark import api
+
+    window = {"start_date": datetime(2024, 1, 1), "end_date": datetime(2024, 1, 3)}
+    service.resources(["r2"], start_date=datetime(2023, 1, 1))  # the signature's first request
+    calls, counting = [0], [False]
+    me = threading.get_ident()
+    send_command = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        if counting[0] and threading.get_ident() == me:
+            calls[0] += 1
+        return send_command(self, *args, **kwargs)
+
+    def write_xes(*args, **kwargs):  # the first trace has been read by now
+        counting[0] = False
+        return api_write_xes(*args, **kwargs)
+
+    api_write_xes = api.write_xes
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    monkeypatch.setattr(api, "write_xes", write_xes)
+    counting[0] = True
+    path = service.resources(["r1", "r2"], **window)
+    assert not counting[0]
+    assert 0 < calls[0] <= REQUEST_PY4J_CALLS, calls[0]
+    assert {t["attrs"]["concept:name"] for t in read_xes(path)} == {"c1", "c2"}
 
 
 def test_concurrent_requests_publish_complete_artifacts(service):

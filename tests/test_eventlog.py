@@ -6,14 +6,18 @@ each flag combination's expected output is derivable by hand.
 
 from __future__ import annotations
 
+import re
+from dataclasses import replace
 from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
 from mobsos_event_log_generator_spark.operators import filters as Fi
+from mobsos_event_log_generator_spark.operators import transforms as Tr
 from mobsos_event_log_generator_spark.operators.traces import assemble_traces, global_time_bounds, is_empty, trace_stats
-from mobsos_event_log_generator_spark.plans.eventlog import EventLogParams, build_eventlog, resolve_and_build_for_bot
+from mobsos_event_log_generator_spark.plans import eventlog as EL
+from mobsos_event_log_generator_spark.plans.eventlog import EventLogParams, build_eventlog
 from mobsos_event_log_generator_spark.schema import (
     EVENTLOG_SCHEMA,
     XES_ACTIVITY,
@@ -117,18 +121,123 @@ def test_global_bounds_and_empty(spark, eventlog):
     assert is_empty(eventlog.filter(F.col("CASE_ID") == "nope"))
 
 
-def test_bot_resolution_e3(eventlog):
-    """E3: bot name → resource ids → E2 pipeline (app.py:130-170)."""
-    payload = {
-        "r1": {"name": "menuBot", "version": 1},
-        "r2": {"name": "otherBot"},
-        "r3": "not-a-dict",
-        "r4": {"noname": True},
-    }
-    out = resolve_and_build_for_bot(eventlog, "menuBot", payload, EventLogParams())
-    assert {r["RESOURCE"] for r in out.collect()} == {"r1"}
-    with pytest.raises(ValueError):
-        resolve_and_build_for_bot(eventlog, "ghostBot", payload, EventLogParams())
+def reference_build_eventlog(events, params: EventLogParams):
+    """Reference twin of ``build_eventlog``: the reference's step order, with
+    F2 and F5 applied to the raw columns before any projection, nothing
+    memoized."""
+    df = events.filter(Fi.case_not_null())  # F1
+    if params.resource_ids is not None:  # F2
+        df = Fi.filter_resources(df, params.resource_ids)
+    if not params.include_bot_messages:  # F3
+        df = df.filter(Fi.exclude_raw_bot_events(params.raw_bot_code))
+    if not params.include_life_cycle_start:  # F4
+        df = df.filter(Fi.exclude_lifecycle_start())
+    if params.start_date is not None:  # F5, closed interval on the raw column
+        df = df.filter(F.col("TIME_STAMP") >= F.lit(params.start_date))
+    if params.end_date is not None:
+        df = df.filter(F.col("TIME_STAMP") <= F.lit(params.end_date))
+    df = df.withColumn("EVENT_TYPE", Tr.recode_event_type(params.recode_map))  # P2
+    if not params.include_bot_messages:  # F6
+        df = df.filter(Fi.keep_user_and_service_events())
+    df = Tr.rename_to_xes(df)  # P1
+    if not params.include_life_cycle_start:  # F7
+        df = df.filter(Fi.lifecycle_complete_only(XES_LIFECYCLE))
+    df = Tr.cast_timestamp(df)  # P3
+    if params.deserialize_remarks and params.remarks_keys:  # P5
+        df = Tr.flatten_remarks(df, params.remarks_keys)
+    return Tr.fill_defaults(df)  # P4
+
+
+#: Windows relative to ROWS (2024-01-01 10:00 .. 2024-01-03 12:00); the
+#: closed bounds sit exactly on event timestamps.
+WINDOWS = [
+    (None, None),
+    (datetime(2024, 1, 2, 9, 0, 0), None),
+    (None, datetime(2024, 1, 2, 9, 0, 0)),
+    (datetime(2024, 1, 1, 10, 0, 5), datetime(2024, 1, 2, 9, 30, 0)),
+    (datetime(2030, 1, 1), datetime(2030, 2, 1)),
+]
+ID_LISTS = [None, ["r1"], ["r1", "r2", "r9"]]
+FLAGS = [(b, s, r) for b in (False, True) for s in (False, True) for r in (False, True)]
+
+
+@pytest.mark.parametrize("bots,starts,remarks", FLAGS)
+def test_build_eventlog_equals_reference_order(spark, eventlog, tmp_path, bots, starts, remarks):
+    """Binding F2/F5 to the memoized normalization gives the reference
+    order's rows and schema, and the service's XES bytes equal
+    ``write_xes`` of the twin, for every window and id list."""
+    from mobsos_event_log_generator_spark.api import EmptyEventLog, EventLogService
+    from mobsos_event_log_generator_spark.cache import ArtifactCache
+    from mobsos_event_log_generator_spark.sinks.xes import write_xes
+
+    base = EventLogParams(remarks_keys=["user", "intent", "serviceEndpoint"])
+    service = EventLogService(eventlog, ArtifactCache(str(tmp_path / "cache")), base)
+    flags = {"include_bot_messages": bots, "include_life_cycle_start": starts, "deserialize_remarks": remarks}
+    for start, end in WINDOWS:
+        for ids in ID_LISTS:
+            params = EventLogParams(start_date=start, end_date=end, resource_ids=ids, **flags,
+                                    remarks_keys=base.remarks_keys)
+            got, want = build_eventlog(eventlog, params), reference_build_eventlog(eventlog, params)
+            assert got.dtypes == want.dtypes
+            assert sorted(got.collect()) == sorted(want.collect()), (start, end, ids)
+
+            twin = str(tmp_path / "twin.xes")
+            n = write_xes(want, twin)
+            if ids is None:
+                path = str(tmp_path / "got.xes")
+                assert write_xes(got, path) == n
+            elif n == 0:
+                with pytest.raises(EmptyEventLog):
+                    service.resources(ids, start_date=start, end_date=end, **flags)
+                continue
+            else:
+                path = service.resources(ids, start_date=start, end_date=end, **flags)
+            with open(path, "rb") as a, open(twin, "rb") as b:
+                assert a.read() == b.read(), (start, end, ids)
+
+
+def test_normalization_memo_hits_and_keys(eventlog):
+    """A repeated flag signature reuses the memoized plan; a changed recode
+    map or remarks key list builds a new one instead of a stale hit."""
+    params = EventLogParams(include_bot_messages=True, deserialize_remarks=True, remarks_keys=["user"])
+    first = build_eventlog(eventlog, params)
+    hits = EL._normalized.cache_info().hits
+    assert build_eventlog(eventlog, params) is first  # no F2/F5 to bind: the memoized plan itself
+    bound = build_eventlog(eventlog, replace(params, resource_ids=["r1"]))
+    assert EL._normalized.cache_info().hits == hits + 2
+    assert {r["RESOURCE"] for r in bound.collect()} == {"r1"}
+
+    recoded = replace(params, recode_map={"SERVICE_CUSTOM_MESSAGE_1": "X"})
+    misses = EL._normalized.cache_info().misses
+    assert "X" in {r["EVENT_TYPE"] for r in build_eventlog(eventlog, recoded).collect()}
+    assert "X" not in {r["EVENT_TYPE"] for r in first.collect()}
+
+    rekeyed = replace(params, remarks_keys=["intent"])
+    assert "intent" in build_eventlog(eventlog, rekeyed).columns
+    assert "intent" not in first.columns
+    assert EL._normalized.cache_info().misses == misses + 2
+
+
+def _plan_shape(df) -> tuple[list[str], list[str]]:
+    """Operator names of the executed plan, and the scan's sorted pushed
+    filters (read from the scan node: the plan string abbreviates them)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    ops = [re.sub(r"^[\s:+\-*()0-9]*", "", line).split(" ")[0] for line in plan.toString().splitlines()]
+    pushed = plan.collectLeaves().head().metadata().apply("PushedFilters")
+    return ops, sorted(pushed.strip("[]").split(", "))
+
+
+def test_windowed_multi_id_plan_matches_reference(spark, tmp_path):
+    """Over a parquet scan, F2/F5 applied last still land in the scan's
+    Filter: same operators and PushedFilters as the reference order."""
+    path = str(tmp_path / "eventlog.parquet")
+    spark.createDataFrame(ROWS, EVENTLOG_SCHEMA).write.parquet(path)
+    events = spark.read.parquet(path)
+    params = EventLogParams(resource_ids=["r1", "r2"], start_date=datetime(2024, 1, 1),
+                            end_date=datetime(2024, 1, 2, 12, 0, 0))
+    got, want = _plan_shape(build_eventlog(events, params)), _plan_shape(reference_build_eventlog(events, params))
+    assert got == want
+    assert any("RESOURCE" in f for f in got[1]) and any("TIME_STAMP" in f for f in got[1])
 
 
 def test_large_inlist_uses_semi_join(spark, eventlog):
