@@ -25,6 +25,7 @@ from mobsos_event_log_generator_spark.schema import (
     XES_LIFECYCLE,
     XES_TIMESTAMP,
 )
+from mobsos_event_log_generator_spark.sources.rest import resolve_bot_resources
 
 ROWS = [
     # EVENT_TYPE, CASE_ID, ACTIVITY, TIME_STAMP, LIFECYCLE, RESOURCE, RESOURCE_TYPE, REMARKS
@@ -119,6 +120,22 @@ def test_global_bounds_and_empty(spark, eventlog):
     assert bounds["max_ts"] == datetime(2024, 1, 3, 12, 0, 0)
     assert not is_empty(eventlog)
     assert is_empty(eventlog.filter(F.col("CASE_ID") == "nope"))
+
+
+def test_bot_resolution_e3(eventlog):
+    """E3: bot name → resource ids → E2 pipeline (app.py:130-170)."""
+    payload = {
+        "r1": {"name": "menuBot", "version": 1},
+        "r2": {"name": "otherBot"},
+        "r3": "not-a-dict",
+        "r4": {"noname": True},
+    }
+    ids = resolve_bot_resources(payload, "menuBot")
+    assert ids == ["r1"]
+    out = build_eventlog(eventlog, EventLogParams(resource_ids=ids))
+    assert {r["RESOURCE"] for r in out.collect()} == {"r1"}
+    assert resolve_bot_resources(payload, "ghostBot") == []
+    assert resolve_bot_resources("not-a-dict", "menuBot") == []
 
 
 def reference_build_eventlog(events, params: EventLogParams):
