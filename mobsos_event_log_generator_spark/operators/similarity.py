@@ -11,9 +11,15 @@ Two paths, same API:
   bucket. At 100 TB the bucket key is the shuffle/partition key, turning ANN
   into an equi-join instead of a cross product.
 
-Determinism contract: cosine is computed as left-to-right double folds
-(dot, norms) and rounded to 6 decimals; ranking ties break on vec_id — so
-Spark and the DuckDB oracle produce identical top-k sets.
+Determinism contract: cosine is ``dot / (sqrt(|a|²) · sqrt(|b|²))`` with each
+sum a left-to-right double fold from 0.0, rounded by Spark's ``round(_, 6)``
+(HALF_UP) or quantized by ``floor(_·1e6 + 0.5)``; distances are the same fold
+over ``(x − y)²``. Rankings order by the rounded value — NaN is the largest
+value, as in Spark — and break ties on the id. A zero cosine divisor raises
+``DIVIDE_BY_ZERO`` (ANSI). The DuckDB oracles replay these folds, and every
+Arrow kernel here does its float arithmetic through ``vector_kernels``, which
+implements exactly this contract — so each Arrow kernel's rows are bit-equal
+to its JVM twin's, or both raise.
 """
 
 from __future__ import annotations
@@ -23,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mobsos_event_log_generator_spark.driver_rows import driver_rows_df
+from mobsos_event_log_generator_spark.operators import vector_kernels as vk
 
 CODE_BITS = 8
 
@@ -84,18 +91,6 @@ def cosine_unrolled(a_col: str, b_col: str, dim: int) -> Column:
 MAX_COLLECTED_QUERY_ROWS = 65536
 
 
-def _round_half_up(arr, decimals: int = 6):
-    """HALF_UP rounding for numpy arrays, bit-matching Spark's ``F.round``
-    (java.math.RoundingMode.HALF_UP — ties away from zero). ``np.round`` is
-    half-to-EVEN, so a cosine landing exactly on a 5e-7 midpoint would round
-    differently between the Arrow and JVM paths; this helper restores the
-    shared determinism contract."""
-    import numpy as np
-
-    scale = 10.0**decimals
-    return np.sign(arr) * np.floor(np.abs(arr) * scale + 0.5) / scale
-
-
 def _collect_bounded(queries: DataFrame, cols, cap: int = MAX_COLLECTED_QUERY_ROWS):
     """Collect the query side driver-side with the broadcast-dim assumption
     enforced: the ``limit(cap + 1)`` is part of the plan, so an oversized
@@ -112,6 +107,12 @@ def _collect_bounded(queries: DataFrame, cols, cap: int = MAX_COLLECTED_QUERY_RO
     return rows
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k tail every cosine search shares: per ``query_id``,
+    ``row_number`` over (cosine DESC, neighbor_id) as a long ``rank``, kept
+    while ≤ k."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
 def hypercube_code(vec: Column, bits: int = CODE_BITS) -> Column:
     """Deterministic coarse-quantizer bucket: bit j = sign(vec[j]).
 
@@ -147,11 +148,7 @@ def cosine_topk(
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 def cosine_micro(a: Column, b: Column) -> Column:
@@ -303,15 +300,12 @@ def mmr_rerank_arrow(
     candidate generation (shared ``_mmr_candidates``), then each query's pool
     flows through ONE ``applyInPandas`` pass — pair sims plus the k-round
     greedy loop in int64 — instead of k unrolled join/window stages. The pair
-    cosines are accumulated DIMENSION-BY-DIMENSION in index order, exactly
-    the JVM fold's summation order, so the floor-quantized sim_micro is
-    bit-identical to ``cosine_micro`` (a BLAS matmul's pairwise/blocked
-    reduction could land one micro-unit away at a floor boundary and flip a
-    greedy round). Non-finite cosines (zero-norm vectors) are masked out of
-    the max like SQL's NULL-skipping max. Same integer selection rule and
-    doc_id tie-break, so it shares ``mmr_rerank``'s oracle (unit-gated
-    row-identical, the ``semdedup_arrow`` pattern); per-group memory is
-    O(pool·dim + pool²), bounded by construction."""
+    sims are ``vector_kernels``' fold cosines through ``micro``, the
+    ``cosine_micro`` quantizer with Java's double→long cast (a NaN cosine is
+    0 on both paths), and a zero-norm pair raises like the JVM division.
+    Same integer selection rule and doc_id tie-break, so it shares
+    ``mmr_rerank``'s oracle (unit-gated row-identical); per-group memory is
+    O(pool·dim + pool²), bounded by the ``pool`` hyperparameter."""
     import pandas as pd
 
     from pyspark.sql import types as T
@@ -336,34 +330,17 @@ def mmr_rerank_arrow(
         )
         ids = pdf["doc_id"].to_numpy(dtype=np.int64)
         rel = pdf["rel_micro"].to_numpy(dtype=np.int64)
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["c_vec"]])
-        n = len(ids)
-        # dot products and squared norms accumulated in DIMENSION ORDER —
-        # the JVM fold's exact summation sequence, never a BLAS reduction
-        dots = np.zeros((n, n), dtype=np.float64)
-        nsq = np.zeros(n, dtype=np.float64)
-        for dcol in range(mat.shape[1] if n else 0):
-            col = mat[:, dcol]
-            dots += np.multiply.outer(col, col)
-            nsq += col * col
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dots / np.outer(np.sqrt(nsq), np.sqrt(nsq))
-        finite = np.isfinite(cos)
-        sim = np.full((n, n), np.int64(-(2**62)), dtype=np.int64)
-        sim[finite] = np.floor(cos[finite] * 1e6 + 0.5).astype(np.int64)
+        mat = vk.matrix(pdf["c_vec"])
+        n2 = vk.sqnorms(mat)
+        # the JVM pair join never scores (doc, doc): the diagonal is not live
+        sim = vk.micro(vk.cosines(mat, mat, n2, n2, ~np.eye(len(ids), dtype=bool)))
         picked: list[int] = []
         scores: list[int] = []
-        taken = np.zeros(n, dtype=bool)
-        for rank in range(min(kk, n)):
-            if rank == 0:
-                # rows sorted by (rel desc, id): first row is the argmax
-                cur = np.where(~taken, rel, np.int64(-(2**62)))
-            else:
-                maxsim = sim[:, picked].max(axis=1)
-                # all-masked (non-finite) rows mirror SQL's NULL-skipping
-                # max + COALESCE(maxsim, 0)
-                maxsim = np.where(maxsim == np.int64(-(2**62)), np.int64(0), maxsim)
-                cur = np.where(~taken, rel - maxsim, np.int64(-(2**62)))
+        taken = np.zeros(len(ids), dtype=bool)
+        for _ in range(min(kk, len(ids))):
+            # rows sorted by (rel desc, id): round 1 is the relevance argmax
+            cur = rel - sim[:, picked].max(axis=1) if picked else rel
+            cur = np.where(taken, np.int64(-(2**62)), cur)
             best = np.lexsort((ids, -cur))[0]
             picked.append(best)
             scores.append(int(cur[best]))
@@ -408,11 +385,7 @@ def bucketed_ann_topk(
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 def multiprobe_ann_topk(
@@ -453,8 +426,7 @@ def multiprobe_ann_topk(
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def multiprobe_hq_ann_topk(
@@ -529,8 +501,7 @@ def multiprobe_hq_ann_topk(
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -559,54 +530,39 @@ def cosine_topk_arrow(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Arrow-vectorized brute-force top-k: the pandas-UDF escape hatch for
-    kernels the Column algebra can't express efficiently (here: a BLAS matmul
-    per Arrow batch instead of a per-element fold).
+    """Arrow-vectorized brute-force top-k: the Arrow escape hatch for kernels
+    the Column algebra can't express efficiently (here: a vectorized fold
+    per Arrow batch instead of an interpreted per-pair fold).
 
     The query matrix is closed over (it is small — the broadcast-dim rule);
-    each corpus partition streams through ``mapInPandas`` once, computing
-    cosines for the whole batch with one normalized matmul. Per-partition
-    top-k then a global window keeps shuffle traffic at O(k * |Q|) per
-    partition. Same contract as ``cosine_topk``; ranking ties broken on
-    neighbor id with cosines rounded to 6 dp (numpy's pairwise summation can
-    differ from a sequential fold in the last ulp, so the rounded value is
-    the canonical one)."""
+    each corpus partition streams through ``mapInArrow`` once, and
+    ``vector_kernels.topk`` keeps every query's top-k of the batch, scoring
+    it block by block. A global window then ranks the O(k·|Q|)-per-batch
+    survivors. The rows are ``cosine_topk``'s: fold cosines, Spark's
+    ``round(_, 6)``, NaN first, ties on neighbor id, and a zero-norm vector
+    raises. ``mapInArrow`` rather than ``mapInPandas``, because the pandas
+    conversion turns a NaN cosine into null."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.window import Window as W
+    import pyarrow as pa
 
     q_rows = _collect_bounded(queries, (id_col, vec_col))
     q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
+    q_mat = vk.matrix([r[vec_col] for r in q_rows])
+    cap = vk.BLOCK_CELLS
 
     def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            cos = mat @ q_norm.T  # (batch, |Q|)
-            for qi, qid in enumerate(q_ids):
-                col = cos[:, qi]
-                mask = ids != qid
-                # per-partition top-k preselection bounds the shuffle; order
-                # by the CANONICAL key (rounded cosine desc, id asc) so the
-                # cut never drops a row the global window would rank higher
-                cr = _round_half_up(col[mask])
-                sel = np.lexsort((ids[mask], -cr))[: k * 4]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": ids[mask][sel],
-                        "cosine": cr[sel],
-                    }
-                )
+        for batch in batches:
+            ids = batch.column(0).to_numpy().astype(np.int64)
+            qi, ni, cos, _ = vk.topk(vk.matrix(batch.column(1)), q_mat, k, "cosine", ids, q_ids, cap)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q_ids[qi]), pa.array(ids[ni]), pa.array(cos)],
+                ["query_id", "neighbor_id", "cosine"],
+            )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    scored = corpus.select(id_col, vec_col).mapInArrow(
+        score, "query_id long, neighbor_id long, cosine double"
+    )
+    return _rank_topk(scored, k)
 
 
 def multitable_codes(vec_col: str, num_tables: int = 16, bits: int = 4, dim: int = 64) -> Column:
@@ -681,8 +637,7 @@ def multitable_ann_topk(
     scored = cand.withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec"))).select(
         "query_id", "neighbor_id", "cosine"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def multitable_write_index(
@@ -758,8 +713,7 @@ def multitable_query_index(
     scored = cand.join(vectors, "neighbor_id").withColumn(
         "cosine", cosine(F.col("q_vec"), F.col("c_vec"))
     ).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def _sqdist(a: Column, b: Column) -> Column:
@@ -986,7 +940,7 @@ def ivf_assign_arrow(
     dim: int = 64,  # interface symmetry with ivf_assign; the kernel reads real lengths
     carry_vec: bool = False,
 ) -> DataFrame:
-    """Arrow/BLAS twin of ``ivf_assign`` — the assignment-stage scale path.
+    """Arrow twin of ``ivf_assign`` — the assignment-stage scale path.
 
     ``ivf_assign``'s crossJoin evaluates ``_sqdist`` as an interpreted HOF
     fold (no codegen for ``aggregate``/``zip_with`` — ENGINEERING_NOTES
@@ -998,23 +952,16 @@ def ivf_assign_arrow(
 
     This kernel collects the (bounded, k-row) centroid table to the driver
     — the same pattern as ``ivf_ann_topk_arrow`` — and scans the corpus
-    once via ``mapInPandas``. Equality with the JVM fold is structural for
-    the accumulation and unit-gated for the rounding: squared distances
-    ACCUMULATE PER-DIMENSION in fold order (one float64 add per dim,
-    vectorized across rows — the identical operation sequence
-    ``_sqdist``'s ``aggregate`` performs), so the pre-round float64 values
-    are bit-identical by construction. The HALF_UP step, however, is
-    ``_round_half_up``'s float64 emulation (floor(|x|*1e6+0.5)) of
-    ``F.round``'s BigDecimal HALF_UP — these can disagree when |x|*1e6
-    itself rounds across a .5 midpoint in float64, so that step's equality
-    is EMPIRICAL, guarded by the mandatory
-    ``test_ivf_assign_arrow_matches_jvm`` unit on any embedding-data
-    change (ADVICE r7). Ties resolve to the smallest cid because the
-    centroid matrix is cid-sorted and both argmin and stable argsort keep
-    the first occurrence. The corpus never shuffles and nothing
+    once via ``mapInArrow``: ``vector_kernels.topk`` ranks each row's
+    centroids by (round(fold squared distance, 6), cid) in Spark's order,
+    block by block — the JVM form's rank key, so the assignment is
+    bit-equal to it (unit-gated by ``test_ivf_assign_arrow_matches_jvm``).
+    ``carry_vec`` passes the input vector column through verbatim (no
+    recompute, no cast), so consumers skip the corpus self-join that
+    re-attached it (r12, guide §2.4). The corpus never shuffles and nothing
     corpus-sized is collected or broadcast."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     cents = sorted(
@@ -1022,48 +969,22 @@ def ivf_assign_arrow(
         key=lambda r: r["cid"],
     )
     cids = np.array([r["cid"] for r in cents], dtype=np.int64)
-    cmat = np.array([list(r["cvec"]) for r in cents], dtype=np.float64)
-    npb = int(nprobe)
+    cmat = vk.matrix([r["cvec"] for r in cents])
+    npb, cap = int(nprobe), vk.BLOCK_CELLS
     fields = [T.StructField(id_col, T.LongType())]
     if carry_vec:
-        # carry the input vector through VERBATIM (same Arrow values in,
-        # same out — no recompute, no cast), so consumers skip the corpus
-        # self-join that re-attached it (r12, guide §2.4).
         fields.append(T.StructField(vec_col, df.schema[vec_col].dataType))
     fields.append(T.StructField("cid", T.LongType()))
-    out_schema = T.StructType(fields)
+    names = [f.name for f in fields]
 
     def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            acc = np.zeros((len(ids), cmat.shape[0]))
-            for d in range(cmat.shape[1]):  # fold-order accumulation
-                diff = mat[:, d, None] - cmat[None, :, d]
-                acc = acc + diff * diff
-            dist = _round_half_up(acc)
-            if npb == 1:
-                j = np.argmin(dist, axis=1)  # first occurrence = smallest cid
-                out = {id_col: ids, "cid": cids[j]}
-                if carry_vec:
-                    out = {id_col: ids, vec_col: pdf[vec_col], "cid": cids[j]}
-            else:
-                order = np.argsort(dist, axis=1, kind="stable")[:, :npb]
-                out = {
-                    id_col: np.repeat(ids, order.shape[1]),
-                    "cid": cids[order].ravel(),
-                }
-                if carry_vec:
-                    out = {
-                        id_col: np.repeat(ids, order.shape[1]),
-                        vec_col: pdf[vec_col].repeat(order.shape[1]).reset_index(drop=True),
-                        "cid": cids[order].ravel(),
-                    }
-            yield pd.DataFrame(out)
+        for batch in batches:
+            row, c, _, _ = vk.topk(cmat, vk.matrix(batch.column(1)), npb, "sqdist", cids, cap=cap)
+            cols = [batch.column(0).take(row).cast(pa.int64())]
+            cols += [batch.column(1).take(row)] if carry_vec else []
+            yield pa.RecordBatch.from_arrays(cols + [pa.array(cids[c])], names)
 
-    return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
+    return df.select(id_col, vec_col).mapInArrow(assign, T.StructType(fields))
 
 
 def ivf_train(
@@ -1162,8 +1083,7 @@ def ivf_ann_topk(
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def semdedup(
@@ -1249,35 +1169,30 @@ def semdedup_arrow(
     vec_col: str = "embedding",
     max_cell_size: int | None = None,
     dim: int = 64,
-    arrow_assign: bool = True,
 ) -> DataFrame:
-    """``semdedup`` with BOTH hot stages as Arrow/BLAS kernels: centroid
-    assignment rides ``ivf_assign_arrow`` (per-dimension fold-order
-    accumulation — bit-equal to the JVM ``_sqdist`` by construction), then
-    each cell's members flow through ``applyInPandas`` where ONE n×n matmul
-    scores all pairs — the measured 25x fast path for vector math
-    (BASELINE ANN probe) versus the interpreted JVM fold. HALF_UP rounding
-    (``_round_half_up``) keeps cosines and distances bit-equal to the
-    JVM/SQL form, so both variants share one oracle (unit-gated
-    equivalence, same pattern as ``ivf_ann_topk_arrow``).
-    ``arrow_assign=False`` reverts assignment to the JVM crossJoin fold —
-    fine at fixed small k, quadratic-in-N interpreted work under the
-    centroids-scale-with-corpus rule (round-7 x100 probe: >7 min at 200k
-    vectors / k=800 vs seconds on the Arrow path).
+    """``semdedup`` with BOTH hot stages as Arrow kernels: centroid
+    assignment rides ``ivf_assign_arrow`` (the Arrow twin of the JVM
+    crossJoin fold — >7 min at 200k vectors / k=800 in the round-7 x100
+    probe against seconds here), then each cell's members flow through
+    ``applyInPandas``, where the pair sweep scores the cell's lower triangle
+    block by block through ``vector_kernels``: fold cosines, Spark's
+    ``round(_, 6)``, Spark's ``>=`` (a NaN cosine counts as a duplicate) and
+    a raise on a zero-norm pair. Each member keeps its smallest dominating
+    id. The rows are the JVM ``semdedup``'s, so both variants share one
+    oracle (unit-gated equivalence).
 
     Scale shape: grouping key = cid (the same shuffle the JVM form does);
-    per-cell memory is O(cell² ) booleans + O(cell·dim) floats, bounded by
-    the num-centroids-scales-with-corpus rule / ``max_cell_size``."""
+    per-cell memory is O(cell·dim) vectors plus O(block) pair temporaries,
+    never O(cell²)."""
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    assign_fn = ivf_assign_arrow if arrow_assign else ivf_assign
-    cents = ivf_train(corpus, num_centroids, iters, id_col, vec_col, dim, assign=assign_fn)
+    cents = ivf_train(corpus, num_centroids, iters, id_col, vec_col, dim, assign=ivf_assign_arrow)
     # carry_vec: the assignment kernel keeps the vector on its output rows,
     # deleting the corpus self-join that re-attached it (r12, guide §2.4 —
     # one exchange + one corpus scan less per plan; rows identical).
-    assigned = assign_fn(corpus, cents, 1, id_col, vec_col, dim, carry_vec=True)
+    assigned = ivf_assign_arrow(corpus, cents, 1, id_col, vec_col, dim, carry_vec=True)
     if max_cell_size is not None:
         sizes = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("_n"))
         small = sizes.filter(F.col("_n") <= max_cell_size).select("cid")
@@ -1299,71 +1214,32 @@ def semdedup_arrow(
             T.StructField("kept", T.BooleanType()),
         ]
     )
-    tau = float(threshold)
+    tau, cap = float(threshold), vk.BLOCK_CELLS
 
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         ids = pdf[id_col].to_numpy()
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        norms[norms == 0.0] = 1.0
-        cos = _round_half_up((mat @ mat.T) / np.outer(norms, norms))
-        # ids are sorted ascending: dominators of row i are columns j < i
-        dup_of = np.full(len(ids), -1, dtype=np.int64)
-        hit = cos >= tau
-        for i in range(1, len(ids)):
-            js = np.nonzero(hit[i, :i])[0]
-            if js.size:
-                dup_of[i] = ids[js[0]]  # smallest dominating cell-mate id
+        mat = vk.matrix(pdf[vec_col])
+        n, n2, pos = len(ids), vk.sqnorms(mat), np.arange(len(ids))
+        first = np.full(n, n)  # position of the smallest dominating id; n = none
+        for rs, cs in vk.blocks(n, n, cap):
+            live = pos[None, cs] < pos[rs, None]  # ids ascend: i's dominators are j < i
+            if live.any():
+                cos = vk.round6(vk.cosines(mat[rs], mat[cs], n2[rs], n2[cs], live))
+                hit = vk.at_least(cos, tau) & live
+                first[rs] = np.minimum(
+                    first[rs], np.where(hit.any(axis=1), hit.argmax(axis=1) + cs.start, n)
+                )
+        dup_of = pd.array(ids[np.minimum(first, n - 1)], dtype="Int64")
+        dup_of[first == n] = pd.NA
         return pd.DataFrame(
-            {
-                id_col: ids,
-                "cid": pdf["cid"].to_numpy(),
-                "dup_of": pd.array(
-                    [None if d < 0 else int(d) for d in dup_of], dtype="Int64"
-                ),
-                "kept": dup_of < 0,
-            }
+            {id_col: ids, "cid": pdf["cid"].to_numpy(), "dup_of": dup_of, "kept": first == n}
         )
 
     swept = kept_cells.groupBy("cid").applyInPandas(sweep, out_schema)
     return swept.unionByName(passthrough) if passthrough is not None else swept
-
-
-def _ivf_cell_knn_jvm(
-    corpus: DataFrame,
-    k: int,
-    num_centroids: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-) -> DataFrame:
-    """The JVM pair-join form of ``_ivf_cell_knn`` — kept as the equality
-    reference for the Arrow kernel's unit gate
-    (``test_ivf_cell_knn_arrow_matches_jvm``). Not a production path: the
-    cell self-join caps parallelism at num_centroids tasks and scores
-    cell² pairs with three interpreted 64-step folds each (r12 measured
-    ~29 s at sf0.1 for embedding_knn_clusters; the unrolled-chain variant
-    blew Janino's 64 KB method limit inside the BHJ consume and fell back
-    interpreted anyway — the r12 sweep codegen log's only two events)."""
-    cents = ivf_train(corpus, num_centroids, iters, id_col, vec_col, dim)
-    assigned = ivf_assign(corpus, cents, 1, id_col, vec_col, dim, carry_vec=True)
-    assigned = assigned.localCheckpoint(eager=True)
-    a = assigned.select("cid", F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
-    b = assigned.select("cid", F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"))
-    w = Window.partitionBy("a_id").orderBy(F.col("cos").desc(), F.col("b_id"))
-    return (
-        a.join(b, "cid")
-        .filter(F.col("a_id") != F.col("b_id"))
-        .withColumn("cos", cosine(F.col("a_vec"), F.col("b_vec")))
-        .select("a_id", "b_id", "cos")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("a_id", "b_id", "cos", F.col("rk").cast("long").alias("rk"))
-    )
 
 
 def _ivf_cell_knn(
@@ -1382,65 +1258,29 @@ def _ivf_cell_knn(
     hard-negative miner — their oracles replay this exact edge set, so it
     MUST be one block.
 
-    r12: the per-cell scoring is the semdedup_arrow ``applyInPandas``
-    kernel shape — ONE pass per cell where dot products and square norms
-    ACCUMULATE PER-DIMENSION in fold order (a rank-1 update per dim: the
-    identical left-associative add sequence the JVM ``cosine`` fold
-    evaluates, so the pre-round doubles are bit-identical by
-    construction), then ``_round_half_up`` (the standard gated HALF_UP
-    emulation) and a per-row (cos desc, id) top-k. The JVM pair-join form
-    this replaces ran three interpreted 64-step folds on cell² pairs with
-    parallelism capped at num_centroids tasks (~29 s at sf0.1); unit gate:
-    ``test_ivf_cell_knn_arrow_matches_jvm``."""
+    Each cell's members flow through ONE ``applyInArrow`` pass, where
+    ``vector_kernels.topk`` ranks every member's cell-mates by fold cosine
+    (Spark's ``round(_, 6)``, NaN first, id ties; a zero-norm pair raises)
+    block by block — memory O(cell·dim + block), never cell². Arrow rather
+    than pandas, because the pandas conversion turns a NaN cosine into null.
+    The JVM pair-join form this replaced (three interpreted 64-step folds
+    on cell² pairs, parallelism capped at num_centroids tasks, ~29 s at
+    sf0.1) is the reference of ``test_ivf_cell_knn_arrow_matches_jvm``."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    import pyarrow as pa
 
     cents = ivf_train(corpus, num_centroids, iters, id_col, vec_col, dim)
     assigned = ivf_assign(corpus, cents, 1, id_col, vec_col, dim, carry_vec=True)
-    out_schema = T.StructType(
-        [
-            T.StructField("a_id", T.LongType()),
-            T.StructField("b_id", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-            T.StructField("rk", T.LongType()),
-        ]
-    )
-    kk = int(k)
+    kk, cap = int(k), vk.BLOCK_CELLS
 
-    def cell_knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"a_id": [], "b_id": [], "cos": [], "rk": []}).astype(
-                {"a_id": "int64", "b_id": "int64", "cos": "float64", "rk": "int64"}
-            )
-        # b_id ascending so stable sort keeps the id tiebreak
-        pdf = pdf.sort_values(by=pdf.columns[0]).reset_index(drop=True)
-        ids = pdf.iloc[:, 0].to_numpy()
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf.iloc[:, 1]])
-        dot = np.zeros((n, n))
-        sq = np.zeros(n)
-        for d in range(mat.shape[1]):  # fold-order accumulation
-            col = mat[:, d]
-            dot = dot + col[:, None] * col[None, :]
-            sq = sq + col * col
-        nrm = np.sqrt(sq)
-        cos = _round_half_up(dot / (nrm[:, None] * nrm[None, :]))
-        rows_a, rows_b, rows_c, rows_r = [], [], [], []
-        for i in range(n):
-            order = np.argsort(-cos[i], kind="stable")  # ids asc breaks ties
-            order = order[order != i][:kk]
-            rows_a.extend([ids[i]] * len(order))
-            rows_b.extend(ids[order])
-            rows_c.extend(cos[i, order])
-            rows_r.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {"a_id": rows_a, "b_id": rows_b, "cos": rows_c,
-             "rk": np.array(rows_r, dtype=np.int64)}
-        )
+    def cell_knn(tbl):
+        ids = tbl.column(0).to_numpy().astype(np.int64)
+        mat = vk.matrix(tbl.column(1))
+        a, b, cos, rk = vk.topk(mat, mat, kk, "cosine", ids, ids, cap)
+        return pa.table({"a_id": ids[a], "b_id": ids[b], "cos": cos, "rk": rk})
 
-    return assigned.select(id_col, vec_col, "cid").groupBy("cid").applyInPandas(
-        cell_knn, out_schema
+    return assigned.select(id_col, vec_col, "cid").groupBy("cid").applyInArrow(
+        cell_knn, "a_id long, b_id long, cos double, rk long"
     )
 
 
@@ -1679,12 +1519,18 @@ def gram_partials(
     this kernel — every value is exact int64 and int64 sums are
     associative: bit-identical on any partitioning by construction).
 
-    Emits, per input partition: rows (kind='s', j, k, val) with the upper
-    triangle (j ≤ k) of U^T·U, (kind='d', j, 0, val) with the per-dimension
-    sums, and ('n', 0, 0, count). Callers sum the partials in a tiny
-    (dim²/2)-row JVM aggregate — the corpus-scaled pair explode/self-join
-    never exists. int64 headroom: |u| ≤ ~2^21 micro units for unit-scale
-    embeddings, so Σ u·u stays < 2^53 up to ~10^9 rows per partition."""
+    Emits, per flush: rows (kind='s', j, k, val) with the upper triangle
+    (j ≤ k) of U^T·U, (kind='d', j, 0, val) with the per-dimension sums,
+    and ('n', 0, 0, count). Callers sum the partials in a tiny
+    (dim²/2)-row decimal(38,0) JVM aggregate — the corpus-scaled pair
+    explode/self-join never exists.
+
+    int64 headroom: the input is not clamped, so nothing bounds |u| but
+    the data. Each batch's largest product is max|u|²; the kernel keeps an
+    exact bound on every running cell and flushes the partial rows before
+    it could pass 2^63 − 1 (with unit-scale values, |u| ≤ 1e6, that is one
+    flush per ~9.2M rows), and raises if a single product u_j·u_k cannot
+    fit (|u| > ~3.04e9 micro units)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -1698,25 +1544,40 @@ def gram_partials(
         ]
     )
     ju, ku = np.triu_indices(dim)
+    lim = 2**63 - 1
+
+    def emit(g, s, n):
+        return pd.DataFrame(
+            {
+                "kind": ["s"] * len(ju) + ["d"] * dim + ["n"],
+                "j": np.concatenate([ju + 1, np.arange(1, dim + 1), [0]]).astype(np.int32),
+                "k": np.concatenate([ku + 1, np.zeros(dim, dtype=np.int64), [0]]).astype(np.int32),
+                "val": np.concatenate([g[ju, ku], s, [n]]),
+            }
+        )
 
     def partials(batches):
         g = np.zeros((dim, dim), dtype=np.int64)
         s = np.zeros(dim, dtype=np.int64)
-        n = 0
+        n = used = 0  # used: exact bound on every |g| and |s| cell
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             u = np.array([np.asarray(v, dtype=np.int64) for v in pdf[arr_col]])
-            g += u.T @ u
-            s += u.sum(axis=0)
-            n += len(pdf)
-        rows = {
-            "kind": ["s"] * len(ju) + ["d"] * dim + ["n"],
-            "j": np.concatenate([ju + 1, np.arange(1, dim + 1), [0]]).astype(np.int32),
-            "k": np.concatenate([ku + 1, np.zeros(dim, dtype=np.int64), [0]]).astype(np.int32),
-            "val": np.concatenate([g[ju, ku], s, [n]]),
-        }
-        yield pd.DataFrame(rows)
+            top = max(int(u.max()), -int(u.min()), 1) ** 2
+            if top > lim:
+                raise OverflowError(f"gram_partials: |u|² = {top} exceeds int64")
+            step = lim // top  # rows whose products always fit one accumulator
+            for i in range(0, len(u), step):
+                chunk = u[i : i + step]
+                if used + len(chunk) * top > lim:
+                    yield emit(g, s, n)
+                    g, s, n, used = np.zeros_like(g), np.zeros_like(s), 0, 0
+                g += chunk.T @ chunk
+                s += chunk.sum(axis=0)
+                n += len(chunk)
+                used += len(chunk) * top
+        yield emit(g, s, n)
 
     return quantized.select(arr_col).mapInPandas(partials, out_schema)
 
@@ -1831,9 +1692,9 @@ def ivf_ann_topk_arrow(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
-    """IVF routing composed with the Arrow/BLAS kernel — the measured-fast
-    ANN shape (BASELINE ANN probe: IVF prunes 4.5x at 400 queries, the Arrow
-    matmul is 25x over the JVM fold; this composes both).
+    """IVF routing composed with the Arrow kernel — the measured-fast ANN
+    shape (BASELINE ANN probe: IVF prunes 4.5x at 400 queries; this
+    composes it with the vectorized scoring of ``cosine_topk_arrow``).
 
     Training stays on the JVM path (`ivf_train` — oracle-identical
     centroids), collected ONCE as the tiny centroid matrix. (Measured
@@ -1841,73 +1702,47 @@ def ivf_ann_topk_arrow(
     SLOWER at 40k rows — the extra shuffle join and corpus re-scan cost more
     than the interpreted fold saved; see BASELINE ANN probe.) Queries (the
     small side) are assigned to their nprobe cells driver-side; the corpus
-    streams through ONE mapInPandas pass that assigns each batch row to its
-    cell with a vectorized distance matmul and scores it against only that
-    cell's query matrix. No shuffle until the final O(k·|Q|) window. Same
-    determinism contract as ``cosine_topk_arrow``: rounded cosines are
-    canonical, ties break on neighbor id; cell assignment uses 6-dp-rounded
-    distances with stable cid tie-break, matching the JVM form."""
+    streams through ONE ``mapInArrow`` pass that assigns each batch row to
+    its cell and scores it against only that cell's queries. Both steps are
+    ``vector_kernels.topk``: the assignment ranks (round(fold squared
+    distance, 6), cid) — ``ivf_assign``'s key — and the scoring ranks fold
+    cosines exactly as ``cosine_topk_arrow`` does, block by block. No
+    shuffle until the final O(k·|Q|) window; the rows are ``ivf_ann_topk``'s."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.window import Window as W
+    import pyarrow as pa
 
     cents_rows = sorted(
         ivf_train(corpus, num_centroids, iters, id_col, vec_col, dim).collect(),
         key=lambda r: r["cid"],
     )
     cids = np.array([r["cid"] for r in cents_rows], dtype=np.int64)
-    C = np.array([r["cvec"] for r in cents_rows], dtype=np.float64)  # (m, dim)
-
-    def assign(mat: "np.ndarray", n: int) -> "np.ndarray":
-        # (rows, m) squared distances; stable argsort ties -> lowest cid
-        d = _round_half_up(((mat[:, None, :] - C[None, :, :]) ** 2).sum(axis=2))
-        return np.argsort(d, axis=1, kind="stable")[:, :n]
-
+    cmat = vk.matrix([r["cvec"] for r in cents_rows])
     q_rows = _collect_bounded(queries, (id_col, vec_col))
     q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_cells = assign(q_mat, nprobe)
-    # cell -> indices of queries probing it
-    cell_queries: dict[int, "np.ndarray"] = {}
-    for qi in range(len(q_ids)):
-        for c in q_cells[qi]:
-            cell_queries.setdefault(int(c), []).append(qi)
-    cell_queries = {c: np.array(v, dtype=np.int64) for c, v in cell_queries.items()}
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
+    q_mat = vk.matrix([r[vec_col] for r in q_rows])
+    cap = vk.BLOCK_CELLS
+    qj, qc, _, _ = vk.topk(cmat, q_mat, nprobe, "sqdist", cids, cap=cap)
+    cell_queries = {c: qj[qc == c] for c in np.unique(qc)}  # cell -> probing queries
 
     def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cell = assign(mat, 1)[:, 0]
-            nmat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        for batch in batches:
+            ids = batch.column(0).to_numpy().astype(np.int64)
+            mat = vk.matrix(batch.column(1))
+            row, cell, _, _ = vk.topk(cmat, mat, 1, "sqdist", cids, cap=cap)
             for c in np.unique(cell):
-                qsel = cell_queries.get(int(c))
-                if qsel is None:
+                if c not in cell_queries:
                     continue
-                rows = np.nonzero(cell == c)[0]
-                cos = nmat[rows] @ q_norm[qsel].T  # (|rows|, |qsel|)
-                for j, qi in enumerate(qsel):
-                    qid = q_ids[qi]
-                    col = cos[:, j]
-                    mask = ids[rows] != qid
-                    # canonical preselection order (rounded cosine desc,
-                    # id asc) — same reasoning as cosine_topk_arrow
-                    cr = _round_half_up(col[mask])
-                    sel = np.lexsort((ids[rows][mask], -cr))[: k * 4]
-                    yield pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[rows][mask][sel],
-                            "cosine": cr[sel],
-                        }
-                    )
+                rows, qsel = row[cell == c], cell_queries[c]
+                qi, ni, cos, _ = vk.topk(mat[rows], q_mat[qsel], k, "cosine", ids[rows], q_ids[qsel], cap)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(q_ids[qsel][qi]), pa.array(ids[rows][ni]), pa.array(cos)],
+                    ["query_id", "neighbor_id", "cosine"],
+                )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    scored = corpus.select(id_col, vec_col).mapInArrow(
+        score, "query_id long, neighbor_id long, cosine double"
+    )
+    return _rank_topk(scored, k)
 
 
 def ivf_write_index(
@@ -1976,8 +1811,7 @@ def ivf_probe_and_score(
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def index_dim_from_centroids(cents: DataFrame) -> int:
@@ -2075,15 +1909,15 @@ def pq_assign_arrow(
     subvector table (~0.5 s wall twice per pq_adc run at sf0.1). Here the
     codebook (bounded m×num_codes rows, already checkpointed by callers)
     is collected and each corpus partition streams through ONE
-    ``mapInPandas`` pass: subspace slicing, per-dimension fold-order
-    distance accumulation (the identical op sequence ``_sqdist_unrolled``
-    evaluates), ``_round_half_up`` 6-dp rounding, argmin with smallest-cid
-    ties — the exact ``ivf_assign_arrow`` equality contract, unit-gated by
+    ``mapInArrow`` pass: subspace slicing, then ``vector_kernels.topk``
+    ranks each subvector's codes by (round(fold squared distance, 6), cid)
+    — the ``ivf_assign_arrow`` contract per subspace, unit-gated by
     ``test_pq_assign_arrow_matches_jvm``. ``carry_sub`` keeps the subvector
-    on the output rows so the Lloyd mean skips the (id, m) self-join. The
-    corpus never shuffles; nothing corpus-sized is collected."""
+    on the output rows (NaN elements intact) so the Lloyd mean skips the
+    (id, m) self-join. The corpus never shuffles; nothing corpus-sized is
+    collected."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     rows = sorted(
@@ -2095,38 +1929,29 @@ def pq_assign_arrow(
         ent = [r for r in rows if r["m"] == m]
         by_m[m] = (
             np.array([r["cid"] for r in ent], dtype=np.int64),
-            np.array([list(r["cvec"]) for r in ent], dtype=np.float64),
+            vk.matrix([r["cvec"] for r in ent]),
         )
     fields = [T.StructField(out_id, T.LongType()), T.StructField("m", T.IntegerType())]
     if carry_sub:
         fields.append(T.StructField("sub", T.ArrayType(T.DoubleType())))
     fields.append(T.StructField(code_col, T.LongType()))
-    out_schema = T.StructType(fields)
+    names, cap = [f.name for f in fields], vk.BLOCK_CELLS
 
     def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            outs = []
+        for batch in batches:
+            ids = batch.column(0).cast(pa.int64())
+            mat = vk.matrix(batch.column(1))
             for m in range(m_subspaces):
                 cids, cmat = by_m[m]
                 sub = mat[:, m * sub_dim : (m + 1) * sub_dim]
-                acc = np.zeros((len(ids), cmat.shape[0]))
-                for d in range(sub_dim):  # fold-order accumulation
-                    diff = sub[:, d, None] - cmat[None, :, d]
-                    acc = acc + diff * diff
-                dist = _round_half_up(acc)
-                j = np.argmin(dist, axis=1)  # first occurrence = smallest cid
-                out = {out_id: ids, "m": np.full(len(ids), m, dtype=np.int32)}
+                row, c, _, _ = vk.topk(cmat, sub, 1, "sqdist", cids, cap=cap)
+                cols = [ids.take(row), pa.array(np.full(len(row), m, dtype=np.int32))]
                 if carry_sub:
-                    out["sub"] = list(sub)
-                out[code_col] = cids[j]
-                outs.append(pd.DataFrame(out))
-            yield pd.concat(outs, ignore_index=True)
+                    offsets = pa.array(np.arange(len(row) + 1, dtype=np.int32) * sub.shape[1])
+                    cols.append(pa.ListArray.from_arrays(offsets, pa.array(sub[row].ravel())))
+                yield pa.RecordBatch.from_arrays(cols + [pa.array(cids[c])], names)
 
-    return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
+    return df.select(id_col, vec_col).mapInArrow(assign, T.StructType(fields))
 
 
 def pq_train(
@@ -2239,12 +2064,7 @@ def pq_ann_topk(
         .join(cv, "neighbor_id")
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        reranked.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_micro", "cosine", "rank")
-    )
+    return _rank_topk(reranked, k).select("query_id", "neighbor_id", "adc_micro", "cosine", "rank")
 
 
 def ivfpq_ann_topk(
@@ -2326,12 +2146,7 @@ def ivfpq_ann_topk(
         .join(cv, "neighbor_id")
         .withColumn("cosine", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        reranked.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_micro", "cosine", "rank")
-    )
+    return _rank_topk(reranked, k).select("query_id", "neighbor_id", "adc_micro", "cosine", "rank")
 
 
 def kmeans_convergence(

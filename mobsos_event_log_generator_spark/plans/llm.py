@@ -453,8 +453,9 @@ def _demo_queries(emb: DataFrame, id_col: str = "vec_id") -> DataFrame:
     return emb.filter((F.col(id_col) % 50 == 0) & (F.col(id_col) < DEMO_QUERY_CAP))
 
 
-#: Shared by the JVM and Arrow brute-force paths — the Arrow kernel's HALF_UP
-#: rounding (similarity._round_half_up) makes both bit-identical to this SQL.
+#: Shared by the JVM and Arrow brute-force paths — the Arrow kernel computes
+#: the same fold, Spark rounding and tie order (operators/vector_kernels.py),
+#: so both are bit-identical to this SQL.
 _SQL_TOPK_BRUTEFORCE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE {_SQL_DEMO_Q}),
 c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -691,7 +692,8 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_mmr_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversification through the Arrow escape hatch: identical JVM
     candidate generation, then ONE applyInPandas pass per query runs the
-    pool×pool BLAS pair matmul and the k greedy rounds in int64 — replacing
+    pool×pool fold-order pair sims (``vector_kernels``) and the k greedy
+    rounds in int64 — replacing
     k unrolled join/window stages with a single grouped kernel (the
     ``semdedup_arrow`` pattern). Shares the unrolled-CTE oracle with
     ``similarity_mmr_diversified``; a unit additionally gates the two
@@ -1013,11 +1015,11 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("similarity_topk_arrow", _SQL_TOPK_BRUTEFORCE)
 def similarity_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/BLAS brute-force top-k (mapInPandas matmul), sharing the JVM
-    path's oracle: the kernel's 6-dp HALF_UP rounding collapses numpy's
-    last-ulp summation variance, so the rounded cosines (and therefore the
-    rank window) are bit-identical to the sequential SQL fold — verified
-    exact-cell at sf0.001 and sf0.01, plus the JVM-equality unit test
+    """Arrow brute-force top-k (one mapInArrow pass), sharing the JVM path's
+    oracle: the kernel's cosines are the sequential fold with Spark's 6-dp
+    HALF_UP rounding and NaN-first order (``vector_kernels``), so the rank
+    window is bit-identical to the SQL fold — gated by the JVM-equality unit
+    test on the fixture and on adversarial midpoint/NaN/zero-norm vectors
     (test_arrow_topk_matches_jvm_topk). Query set: the shared capped demo
     set (it shares the capped brute-force oracle, so the lanes must
     match)."""
@@ -1450,9 +1452,10 @@ def similarity_topk_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("similarity_topk_ann_ivf_arrow", _SQL_IVF_ANN)
 def similarity_topk_ann_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF routing + Arrow/BLAS scoring — the measured-fast composition
+    """IVF routing + Arrow scoring — the measured-fast composition
     (BASELINE ANN probe), sharing the JVM IVF oracle: the Arrow kernel's
-    HALF_UP rounding makes it bit-equal to the JVM path
+    fold-order distances and cosines with Spark's rounding and order
+    (``vector_kernels``) make it bit-equal to the JVM path
     (`test_llm_ops.py::test_ivf_arrow_matches_jvm_ivf`), which matches the
     SQL quantizer replay exact-cell at sf0.001 and sf0.01. Query set capped
     at ≤40 rows (see similarity_topk_ann_bucketed)."""
@@ -4495,10 +4498,10 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("semdedup_embeddings_arrow", _SQL_SEMDEDUP)
 def semdedup_embeddings_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with the within-cell pair sweep as an Arrow/BLAS matmul per
-    cell (the measured 25x vector-math fast path) — shares the JVM
-    variant's quantizer-replay oracle: HALF_UP rounding makes the kernel's
-    cosines bit-equal to the JVM fold
+    """SemDeDup with the within-cell pair sweep as one Arrow kernel per cell
+    — shares the JVM variant's quantizer-replay oracle: the kernel's
+    blocked fold-order cosines with Spark's rounding (``vector_kernels``)
+    are bit-equal to the JVM fold
     (`test_llm_ops.py::test_semdedup_arrow_matches_jvm`), which matches the
     SQL exact-cell. At sf0.1 this is the scale path: 5k vectors / 8 cells
     is ~1.5M pair cosines, fold-bound on the JVM."""

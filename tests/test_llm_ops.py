@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from mobsos_event_log_generator_spark.operators import dedup as D
 from mobsos_event_log_generator_spark.operators import similarity as S
 from mobsos_event_log_generator_spark.operators import text as X
+from mobsos_event_log_generator_spark.operators import vector_kernels as vk
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank today", "en"),
@@ -396,18 +397,29 @@ def test_encode_decode_roundtrip_and_spark_operator(spark):
     assert bad["error"] is not None and bad["width"] is None
 
 
-def test_arrow_topk_matches_jvm_topk(spark):
-    """The pandas-UDF (BLAS) path and the Column-algebra path must agree on
-    the top-k sets and ranks over the fixture."""
+def test_arrow_topk_matches_jvm_topk(spark, monkeypatch):
+    """The Arrow kernel and the Column-algebra path must agree on the top-k
+    neighbors, ranks AND cosines over the fixture and the adversarial
+    corpus (near-midpoint cosines, a NaN vector ranked first, a zero-norm
+    vector raising on both)."""
     from mobsos_event_log_generator_spark.sources.parquet import ensure_min_partitions, load_table
 
     emb = ensure_min_partitions(load_table(spark, "/root/testdata/sf0.001", "embeddings"))
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    jvm = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in S.cosine_topk(emb, queries, k=5).collect()}
-    arrow = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in S.cosine_topk_arrow(emb, queries, k=5).collect()}
+    jvm = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"]) for r in S.cosine_topk(emb, queries, k=5).collect()}
+    arrow = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"]) for r in S.cosine_topk_arrow(emb, queries, k=5).collect()}
     assert jvm == arrow
     plan = S.cosine_topk_arrow(emb, queries, k=5)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan  # the Arrow path is real
+    assert "MapInArrow" in plan  # the Arrow path is real
+
+    def q(d):
+        return d.filter(F.col("vec_id") % 2 == 0)
+
+    _check_edges(
+        spark, monkeypatch,
+        lambda d: S.cosine_topk(d, q(d), k=5),
+        lambda d: S.cosine_topk_arrow(d, q(d), k=5),
+    )
 
 
 def test_grouped_map_zscore_semantics(spark):
@@ -919,7 +931,7 @@ def test_mmr_rerank_greedy_selection(spark):
     assert got[2]["mmr_score_micro"] == rel3 - sim13
 
 
-def test_mmr_arrow_matches_jvm(spark):
+def test_mmr_arrow_matches_jvm(spark, monkeypatch):
     from mobsos_event_log_generator_spark.sources.parquet import load_table
     from mobsos_event_log_generator_spark.operators.similarity import mmr_rerank, mmr_rerank_arrow
 
@@ -935,6 +947,17 @@ def test_mmr_arrow_matches_jvm(spark):
         )
     )
     assert jvm == arrow and len(jvm) > 0
+
+    # pool covers the whole adversarial corpus, so every pair sim is scored
+    def q(d):
+        return d.filter(F.col("vec_id") % 12 == 0)
+
+    cols = ("query_id", "doc_id", "rel_micro", "mmr_score_micro", "mmr_rank")
+    _check_edges(
+        spark, monkeypatch,
+        lambda d: mmr_rerank(d, q(d), k=4, pool=80),
+        lambda d: mmr_rerank_arrow(d, q(d), k=4, pool=80).select(*cols),
+    )
 
 
 def test_kcenter_picks_one_per_cluster(spark):
@@ -980,22 +1003,33 @@ def test_dedup_against_corpus_null_fingerprint(spark):
 
 
 def test_round_half_up_matches_spark_round(spark):
-    """The numpy HALF_UP helper must agree with F.round(_, 6) cell-for-cell,
-    including exact .5e-6 midpoints where np.round (half-to-even) diverges."""
+    """``vector_kernels.round6`` must agree with F.round(_, 6) bit for bit,
+    including exact .5e-6 midpoints where np.round (half-to-even) diverges,
+    and on seeded near-midpoint doubles — the nearest double to each of 299
+    random midpoints and its neighbors 1-3 ulps away — where the float
+    emulation floor(|x|·1e6 + 0.5) goes wrong."""
     import numpy as np
-
-    from mobsos_event_log_generator_spark.operators.similarity import _round_half_up
 
     vals = [0.0000005, 0.0000015, 0.0000025, -0.0000005, -0.0000015,
             1.2345675, -1.2345675, 0.9999995, -0.9999995, 0.0, 1.0,
-            0.123456789, -0.987654321, 3.5e-7, -3.5e-7]
+            0.123456789, -0.987654321, 3.5e-7, -3.5e-7, -1e-9, -0.0,
+            float("nan"), float("inf"), 4.5e9 + 0.1234565, 1e300]
+    rng = np.random.default_rng(20261019)
+    for k in rng.integers(-10**7, 10**7, size=299):
+        for step in (-3, -2, -1, 0, 1, 2):
+            x = (int(k) + 0.5) / 1e6
+            for _ in range(abs(step)):
+                x = float(np.nextafter(x, math.copysign(np.inf, step)))
+            vals.append(x)
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i long, v double")
     jvm = {r["i"]: r["r"] for r in df.select("i", F.round("v", 6).alias("r")).collect()}
-    ours = _round_half_up(np.array(vals))
+    ours = vk.round6(np.array(vals))
     for i, v in enumerate(vals):
-        assert ours[i] == jvm[i], (v, ours[i], jvm[i])
-    # and at least one of these is a case where np.round would have differed
+        assert ours[i].hex() == jvm[i].hex(), (v, ours[i], jvm[i])
+    # the set is adversarial: both np.round and the float emulation miss
+    x = np.array(vals[21:])
     assert any(np.round(np.array([v]), 6)[0] != jvm[i] for i, v in enumerate(vals))
+    assert (np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6 != ours[21:]).sum() > 0
 
 
 def test_arrow_query_collect_is_bounded(spark):
@@ -1134,7 +1168,7 @@ def test_chunk_udtf_matches_jvm(spark):
     assert jvm == py and len(jvm) > 0
 
 
-def test_ivf_arrow_matches_jvm_ivf(spark):
+def test_ivf_arrow_matches_jvm_ivf(spark, monkeypatch):
     vecs = [(i, [math.sin(i * 7 + j) + (1.5 if i % 3 == 0 else -1.5) for j in range(8)]) for i in range(60)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     q = df.filter(F.col("vec_id") % 10 == 0)
@@ -1147,6 +1181,16 @@ def test_ivf_arrow_matches_jvm_ivf(spark):
         for r in S.ivf_ann_topk_arrow(df, q, k=3, num_centroids=4, nprobe=2, iters=1, dim=8).collect()
     }
     assert arrow == jvm and len(arrow) > 0
+
+    def q2(d):
+        return d.filter(F.col("vec_id") % 2 == 0)
+
+    kw = dict(k=3, num_centroids=4, nprobe=2, iters=1, dim=16)
+    _check_edges(
+        spark, monkeypatch,
+        lambda d: S.ivf_ann_topk(d, q2(d), **kw),
+        lambda d: S.ivf_ann_topk_arrow(d, q2(d), **kw),
+    )
 
 
 def test_lsh_rejects_zero_rows_per_band(docs):
@@ -1287,7 +1331,7 @@ def test_canonicalize_url_rules(spark):
     assert by_i[0] == ("www.example.com", "example.com")
 
 
-def test_semdedup_arrow_matches_jvm(spark):
+def test_semdedup_arrow_matches_jvm(spark, monkeypatch):
     vecs = [(i, [math.sin(i * 7 + j) + (1.5 if i % 3 == 0 else -1.5) for j in range(8)]) for i in range(80)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     jvm = {r["vec_id"]: (r["cid"], r["dup_of"], r["kept"])
@@ -1295,6 +1339,15 @@ def test_semdedup_arrow_matches_jvm(spark):
     arrow = {r["vec_id"]: (r["cid"], r["dup_of"], r["kept"])
              for r in S.semdedup_arrow(df, threshold=0.95, num_centroids=4, iters=1, dim=8).collect()}
     assert arrow == jvm and len(arrow) == 80 and any(not v[2] for v in arrow.values())
+
+    # the even midpoint pairs sit exactly on 0.9500005: Spark rounds them to
+    # the threshold, so each is a duplicate only under the exact rounding
+    kw = dict(threshold=0.950001, num_centroids=4, iters=1, dim=16)
+    _check_edges(
+        spark, monkeypatch,
+        lambda d: S.semdedup(d, **kw),
+        lambda d: S.semdedup_arrow(d, **kw),
+    )
 
 
 def test_semdedup_arrow_max_cell_passthrough(spark):
@@ -1746,14 +1799,36 @@ def test_dim_correlation_matches_numpy(spark):
         assert abs(r["corr2_ppm"] / 1e6 - true_r2) < 3e-3
 
 
-def test_ivf_cell_knn_arrow_matches_jvm(spark, sf_dir):
+def _ivf_cell_knn_jvm(corpus, k, num_centroids, iters, id_col, vec_col, dim):
+    """The JVM pair-join form of ``similarity._ivf_cell_knn`` — the equality
+    reference for the Arrow kernel. Not a production path: the cell
+    self-join caps parallelism at num_centroids tasks and scores cell² pairs
+    with three interpreted 64-step folds each (~29 s at sf0.1 for
+    embedding_knn_clusters)."""
+    from pyspark.sql.window import Window
+
+    cents = S.ivf_train(corpus, num_centroids, iters, id_col, vec_col, dim)
+    assigned = S.ivf_assign(corpus, cents, 1, id_col, vec_col, dim, carry_vec=True)
+    assigned = assigned.localCheckpoint(eager=True)
+    a = assigned.select("cid", F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
+    b = assigned.select("cid", F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"))
+    w = Window.partitionBy("a_id").orderBy(F.col("cos").desc(), F.col("b_id"))
+    return (
+        a.join(b, "cid")
+        .filter(F.col("a_id") != F.col("b_id"))
+        .withColumn("cos", S.cosine(F.col("a_vec"), F.col("b_vec")))
+        .select("a_id", "b_id", "cos")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("a_id", "b_id", "cos", F.col("rk").cast("long").alias("rk"))
+    )
+
+
+def test_ivf_cell_knn_arrow_matches_jvm(spark, sf_dir, monkeypatch):
     """The Arrow per-cell kNN kernel must be BIT-EQUAL to the JVM pair-join
     form: fold-order dot/norm accumulation, HALF_UP 6-dp rounding, and the
     (cos desc, id) tie order — on the fixture embeddings at two k values."""
-    from mobsos_event_log_generator_spark.operators.similarity import (
-        _ivf_cell_knn,
-        _ivf_cell_knn_jvm,
-    )
+    from mobsos_event_log_generator_spark.operators.similarity import _ivf_cell_knn
     from mobsos_event_log_generator_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1761,9 +1836,58 @@ def test_ivf_cell_knn_arrow_matches_jvm(spark, sf_dir):
         jvm = sorted(map(tuple, _ivf_cell_knn_jvm(emb, k, 8, 1, "vec_id", "embedding", 64).collect()))
         arrow = sorted(map(tuple, _ivf_cell_knn(emb, k, 8, 1, "vec_id", "embedding", 64).collect()))
         assert jvm == arrow and len(jvm) > 0, k
+    _check_edges(
+        spark, monkeypatch,
+        lambda d: _ivf_cell_knn_jvm(d, 3, 4, 1, "vec_id", "embedding", 16),
+        lambda d: _ivf_cell_knn(d, 3, 4, 1, "vec_id", "embedding", 16),
+    )
 
 
-def test_pq_assign_arrow_matches_jvm(spark, sf_dir):
+def test_vector_topk_memory_is_block_bounded():
+    """``vector_kernels.topk`` — the pair step of ``_ivf_cell_knn`` and
+    ``ivf_ann_topk_arrow`` — keeps O(block) temporaries: over a
+    1,500-member cell with 4,096-cell blocks its peak traced allocation
+    stays far below one n×n float64 matrix (18 MB), and its rows equal the
+    single-block run's."""
+    import tracemalloc
+
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    mat, ids = rng.standard_normal((1500, 16)), np.arange(1500) * 7
+    want = vk.topk(mat, mat, 5, "cosine", ids, ids, cap=1500 * 1500)
+    tracemalloc.start()
+    try:
+        got = vk.topk(mat, mat, 5, "cosine", ids, ids, cap=4096)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert all(np.array_equal(x, y) for x, y in zip(got, want)) and len(got[0]) == 7500
+    assert peak < 1_500_000, peak
+
+
+def test_gram_partials_int64_headroom(spark):
+    """``gram_partials`` must not wrap int64: three rows of u = ±2^31 in ONE
+    partition give Σu² = 3·2^62 > 2^63 − 1. The kernel flushes its partial
+    rows before the headroom runs out, so the callers' decimal(38,0)
+    aggregate of the partials is exact; a single product past int64
+    raises."""
+    big = 2**31
+    df = spark.createDataFrame([([big, -big],)] * 3, "uarr array<long>").coalesce(1)
+    summed = (
+        S.gram_partials(df, 2)
+        .groupBy("kind", "j", "k")
+        .agg(F.sum(F.col("val").cast("decimal(38,0)")).alias("val"))
+    )
+    got = {(r["kind"], r["j"], r["k"]): int(r["val"]) for r in summed.collect()}
+    assert got[("s", 1, 1)] == got[("s", 2, 2)] == 3 * 2**62
+    assert got[("s", 1, 2)] == -3 * 2**62
+    assert (got[("d", 1, 0)], got[("d", 2, 0)], got[("n", 0, 0)]) == (3 * big, -3 * big, 3)
+    with pytest.raises(Exception, match="exceeds int64"):
+        S.gram_partials(spark.createDataFrame([([2**32],)], "uarr array<long>"), 1).collect()
+
+
+def test_pq_assign_arrow_matches_jvm(spark, sf_dir, monkeypatch):
     """The fused Arrow PQ assignment must be BIT-EQUAL to the JVM
     explode + broadcast-join + window form: same fold-order accumulation,
     same HALF_UP 6-dp rounding, same smallest-cid ties (the
@@ -1785,6 +1909,27 @@ def test_pq_assign_arrow_matches_jvm(spark, sf_dir):
             "nid", "m", "code").collect())
     )
     assert jvm == arrow and len(jvm) > 0
+
+    def both(d, cb, m, sd):
+        return (
+            _pq_assign(_pq_subvectors(d, "nid", m, sd), cb, "nid", "code", sd),
+            pq_assign_arrow(d, cb, "nid", "code", m, sd).select("nid", "m", "code"),
+        )
+
+    # distance midpoints: a one-subspace codebook where only Spark's exact
+    # HALF_UP ties code i with the zero code, so the smaller code i wins
+    vecs, cents = _distance_midpoints()
+    d = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    cb1 = spark.createDataFrame([(0, c, v) for c, v in cents], "m int, cid long, cvec array<double>")
+    jvm_d, arrow_d = both(d, cb1, 1, 16)
+    assert sorted(map(tuple, arrow_d.collect())) == sorted(map(tuple, jvm_d.collect()))
+    assert sorted(r["code"] for r in jvm_d.collect()) == [0, 1, 2, 3, 4]
+    _check_edges(
+        spark, monkeypatch,
+        lambda d: both(d, pq_train(d, 4, 4, 4), 4, 4)[0],
+        lambda d: both(d, pq_train(d, 4, 4, 4), 4, 4)[1],
+        zero_raises=False,
+    )
 
 
 def test_kcenter_join_fallback_matches_literal(spark, sf_dir):
@@ -1836,7 +1981,7 @@ def test_srp_signatures_arrow_matches_jvm(spark, sf_dir):
     assert jvm_e == arrow_e
 
 
-def test_ivf_assign_arrow_matches_jvm(spark, sf_dir):
+def test_ivf_assign_arrow_matches_jvm(spark, sf_dir, monkeypatch):
     """The Arrow assignment kernel must be BIT-EQUAL to the JVM crossJoin
     fold: per-dimension fold-order accumulation + HALF_UP 6dp rounding +
     smallest-cid ties. Checked at k=8 and k=32, nprobe 1 and 2."""
@@ -1854,6 +1999,21 @@ def test_ivf_assign_arrow_matches_jvm(spark, sf_dir):
             jvm = sorted(map(tuple, ivf_assign(emb, cents, nprobe).collect()))
             arrow = sorted(map(tuple, ivf_assign_arrow(emb, cents, nprobe).collect()))
             assert jvm == arrow, (k, nprobe)
+
+    # distance midpoints: only Spark's exact HALF_UP ties vector i's
+    # distances to centroid i and to the zero centroid, so cid i wins
+    vecs, cents = _distance_midpoints()
+    d = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    c = spark.createDataFrame(cents, "cid long, cvec array<double>")
+    jvm = sorted(map(tuple, ivf_assign(d, c, 1, dim=16).collect()))
+    assert jvm == [(i, i) for i in range(5)]
+    assert sorted(map(tuple, ivf_assign_arrow(d, c, 1).collect())) == jvm
+    _check_edges(
+        spark, monkeypatch,
+        lambda d: ivf_assign(d, ivf_train(d, num_centroids=4, iters=1, dim=16), 2, dim=16),
+        lambda d: ivf_assign_arrow(d, ivf_train(d, num_centroids=4, iters=1, dim=16), 2),
+        zero_raises=False,
+    )
 
 
 def test_ivf_train_arrow_assign_same_centroids(spark, sf_dir):
@@ -1999,3 +2159,115 @@ def test_cka_views_accumulators_survive_wide(spark):
     assert got["dims_per_view"] == 32
     assert got["hsic_xy_q"] == float(fc)
     assert abs(got["cka"] - fc / (math.sqrt(fa) * math.sqrt(fb))) < 2e-6
+
+
+# ---------------------------------------------------------------------------
+# Adversarial vector cases shared by the Arrow-vs-JVM equality tests
+# ---------------------------------------------------------------------------
+
+
+def _fold_cos(a, b):
+    """The JVM ``cosine`` fold in Python floats (unrounded)."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot, na, nb = dot + x * y, na + x * x, nb + y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def _midpoint_pairs(n_pairs=36, dim=16, seed=20261019):
+    """Vector pairs whose fold cosine is the double nearest a 6-dp midpoint
+    (k + 0.5)·1e-6: ``b`` is built at the target angle from ``a``, then one
+    coordinate is nudged with ``nextafter`` until the fold lands on it.
+    Even pairs target 0.9500005 (the ``semdedup`` threshold case), odd pairs
+    a random midpoint."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    pairs = []
+    for p in range(n_pairs):
+        m = 0.9500005 if p % 2 == 0 else (int(rng.integers(-900_000, 900_000)) + 0.5) / 1e6
+        a = rng.standard_normal(dim)
+        a /= np.linalg.norm(a)
+        e = rng.standard_normal(dim)
+        e -= e.dot(a) * a
+        e /= np.linalg.norm(e)
+        a, b = [float(x) for x in a], [float(x) for x in m * a + math.sqrt(1 - m * m) * e]
+        best = (abs(_fold_cos(a, b) - m), b[0])
+        t = b[0]
+        for _ in range(4000):
+            b[0] = t = float(np.nextafter(t, np.inf if _fold_cos(a, b) < m else -np.inf))
+            best = min(best, (abs(_fold_cos(a, b) - m), t))
+            if best[0] == 0.0:
+                break
+        b[0] = best[1]
+        pairs.append((a, b))
+    return pairs
+
+
+def _edge_corpus(spark, zero=False):
+    """The midpoint pairs (a = even id, b = odd id), a NaN-element vector
+    (id 998) and, with ``zero``, a zero-norm vector (id 1000)."""
+    rows = []
+    for p, (a, b) in enumerate(_midpoint_pairs()):
+        rows += [(2 * p, a), (2 * p + 1, b)]
+    nan_vec = list(rows[0][1])
+    nan_vec[3] = float("nan")
+    rows.append((998, nan_vec))
+    if zero:
+        rows.append((1000, [0.0] * len(nan_vec)))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _distance_midpoints(n=5, dim=16, seed=7):
+    """(vectors, centroids) where vector i's fold squared distance to the
+    zero centroid (cid n) is the double nearest a 6-dp midpoint that a
+    float ``floor(x·1e6 + 0.5)`` rounds DOWN, and its distance to centroid
+    i is that midpoint's HALF_UP value: Spark's ``round`` ties the two, so
+    the smaller cid i wins; a wrong rounding picks cid n."""
+    import numpy as np
+    from decimal import ROUND_HALF_UP, Decimal
+
+    rng = np.random.default_rng(seed)
+    vecs, cents = [], []
+    while len(vecs) < n:
+        m = float((int(rng.integers(10_000, 5_000_000)) + 0.5) / 1e6)
+        up = float(Decimal(repr(m)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+        if math.floor(m * 1e6 + 0.5) / 1e6 == up:
+            continue  # the float emulation gets this one right
+        a = math.sqrt(m)
+        for t in (a, *np.nextafter(a, [np.inf, -np.inf])):
+            if 0.0 + float(t) * float(t) == m:
+                i = len(vecs)
+                x, c = [0.0] * dim, [0.0] * dim
+                x[i] = c[i] = float(t)
+                c[n + i] = math.sqrt(up)
+                vecs.append((i, x))
+                cents.append((i, c))
+                break
+    cents.append((n, [0.0] * dim))
+    return vecs, cents
+
+
+def _bits(rows):
+    """Rows as sorted tuples with floats compared bit for bit (NaN, -0.0)."""
+    return sorted(tuple(v.hex() if isinstance(v, float) else v for v in r) for r in rows)
+
+
+def _check_edges(spark, monkeypatch, jvm, arrow, zero_raises=True):
+    """The Arrow kernel's rows equal its JVM twin's on the adversarial
+    corpus — midpoint pairs plus a NaN vector — with the default block size
+    and with 7-cell blocks (every batch and cell spans many blocks); with a
+    zero-norm vector both raise (cosine kernels) or still agree."""
+    df = _edge_corpus(spark)
+    want = _bits(jvm(df).collect())
+    assert want and _bits(arrow(df).collect()) == want
+    with monkeypatch.context() as mp:
+        mp.setattr(vk, "BLOCK_CELLS", 7)
+        assert _bits(arrow(df).collect()) == want
+    zdf = _edge_corpus(spark, zero=True)
+    if not zero_raises:
+        assert _bits(arrow(zdf).collect()) == _bits(jvm(zdf).collect())
+        return
+    for fn in (jvm, arrow):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            fn(zdf).collect()
