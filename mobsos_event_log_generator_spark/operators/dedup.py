@@ -307,20 +307,6 @@ def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def simhash_buckets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-doc simhash + exact-signature duplicate buckets (hamming-0). Small
-    hamming radii are reachable by re-bucketing on bit-rotations."""
-    sigs = df.select(F.col(id_col), simhash(tokens(text_col)).alias("simhash"))
-    return (
-        sigs.groupBy("simhash")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.array_join(F.array_sort(F.collect_list(F.col(id_col).cast("string"))), ",").alias("members"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     block_col: str,

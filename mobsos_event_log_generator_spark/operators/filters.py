@@ -9,6 +9,10 @@ string-concatenation hazard class disappears.
 
 from __future__ import annotations
 
+import calendar
+import functools
+import operator
+import time
 from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
@@ -67,14 +71,36 @@ def timestamp_between(
     """F5 — closed-interval timestamp range, each bound optional
     (event_reader.py:64-69); ``None`` when neither bound is given, so the
     caller adds no filter at all. On a date-partitioned lake table this
-    predicate also prunes partitions."""
-    pred = None
-    if start is not None:
-        pred = F.col(ts_col) >= F.lit(start)
-    if end is not None:
-        upper = F.col(ts_col) <= F.lit(end)
-        pred = upper if pred is None else pred & upper
-    return pred
+    predicate also prunes partitions.
+
+    ``datetime`` bounds become one parsed expression over their epoch micros
+    (``timestamp_micros(<integer>)``; Catalyst folds it to a timestamp
+    literal, which the scan pushes down). The micros are what PySpark's
+    datetime converter computes: naive = process-local time, aware = UTC.
+    Unlike the converter, nothing re-reads them through
+    ``java.sql.Timestamp``'s hybrid calendar in the JVM's default zone, which
+    moves bounds before the 1582 Gregorian switch, and before about 1900 in
+    zones with local-mean-time history. Building a two-bound window this way
+    takes 3 py4j calls instead of about 75 through Column algebra. ``str``
+    bounds stay string literals that Spark casts. The SQL text holds only
+    integers and ``ts_col``, quoted as one top-level column name."""
+    terms, sql = [], []
+    quoted = "`" + ts_col.replace("`", "``") + "`"
+    for op, sql_op, bound in ((operator.ge, ">=", start), (operator.le, "<=", end)):
+        if isinstance(bound, datetime):
+            sql.append(f"{quoted} {sql_op} timestamp_micros({_epoch_micros(bound)})")
+        elif bound is not None:
+            terms.append(op(F.col(ts_col), F.lit(bound)))
+    if sql:
+        terms.append(F.expr(" AND ".join(sql)))
+    return functools.reduce(operator.and_, terms) if terms else None
+
+
+def _epoch_micros(bound: datetime) -> int:
+    """``bound`` as epoch microseconds, computed as PySpark's
+    ``DatetimeConverter`` computes them."""
+    seconds = calendar.timegm(bound.utctimetuple()) if bound.tzinfo else time.mktime(bound.timetuple())
+    return int(seconds) * 1_000_000 + bound.microsecond
 
 
 def keep_user_and_service_events(event_type_col: str = "EVENT_TYPE") -> Column:

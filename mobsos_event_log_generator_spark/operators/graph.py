@@ -68,12 +68,14 @@ def connected_components(
                 (F.col("n_comp") < F.col("comp")).alias("__changed"),
             )
         )
-        # LAZY: the convergence count below materializes the checkpoint in
-        # the same job (r12 round fusion; single reference, full scan).
+        # LAZY: the convergence probe below materializes the checkpoint. As
+        # a full-scan aggregate it reads every partition by construction; a
+        # ``limit(1).count()`` probe did too, but only because Spark plans
+        # it as a per-partition limit and caches a partition whole.
         new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("__changed")).limit(1).count()
+        changed = new_labels.agg(F.max("__changed")).head()[0]
         labels = new_labels.drop("__changed")
-        if changed == 0:
+        if not changed:
             return labels.select(F.col("node"), F.col("comp").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} iterations; "

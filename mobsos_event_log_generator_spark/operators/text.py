@@ -122,17 +122,6 @@ def quality_score(text_col: str = "text", words: Column | None = None) -> Column
     return F.round((len_ok + shape_ok + stop_ok + punct_ok) / 4.0, 4)
 
 
-def doc_fingerprint(text_col: str = "text") -> Column:
-    """Whole-document fingerprint: md5 of whitespace-normalized text."""
-    return F.md5(F.array_join(tokens(text_col), " "))
-
-
-def rolling_min_fingerprint(words: Column, n: int = 3) -> Column:
-    """Content-defined fingerprint: lexicographic min of shingle hashes (a
-    1-permutation minhash — robust to local edits, unlike whole-doc md5)."""
-    return F.array_min(F.transform(word_shingles(words, n), F.md5))
-
-
 def winnow_fingerprints(words: Column, n: int = 3, window: int = 4) -> Column:
     """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the
     MOSS rolling-hash sampler): md5 every word n-gram, then keep the

@@ -83,11 +83,6 @@ def flatten_remarks(
     )
 
 
-def format_date(col: Column) -> Column:
-    """P7 — ``strftime('%Y-%m-%d')`` analogue (event_reader.py:27,29)."""
-    return F.date_format(col, "yyyy-MM-dd")
-
-
 def infer_remarks_keys(
     df: DataFrame, remarks_col: str = "REMARKS", sample: int | None = None
 ) -> list[str]:

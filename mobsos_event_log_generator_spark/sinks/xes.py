@@ -15,7 +15,13 @@ Two sink modes:
   streamed through ``toLocalIterator`` (bounded driver memory — never a full
   ``collect``) into one file. For interactive/e2e parity with the reference.
   ``xes_trace_stream`` exposes that stream, so a caller can look at the first
-  trace (is the log empty?) before anything is written.
+  trace (is the log empty?) before anything is written. Each partition
+  reaches the driver over its own local socket; over TCP that costs about
+  40 ms per partition, so ``session.get_spark`` uses Unix-domain sockets
+  (ENGINEERING_NOTES pitfall 13). Trace assembly groups by case, which
+  needs an Exchange unless the log's plan already has one partition:
+  ``EventLogService`` coalesces a one-partition source's log to one
+  partition, so its request is a single job.
 * ``single_file=False`` — the 100 TB path: traces are hash-distributed and
   each partition writes one complete, independently-parseable XES file
   (``part-*.xes``) via ``mapPartitions`` (Python touches only partition-sized

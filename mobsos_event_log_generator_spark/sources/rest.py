@@ -5,18 +5,16 @@ JSON dict ``{resource_id: {"name": botName, ...}, ...}``; entries whose value is
 a dict with ``value["name"] == botName`` contribute their key as a resource id;
 malformed JSON resolves to ``[]`` (app.py:263-265).
 
-This is a tiny driver-side dimension (dozens of bots) — fetching it on the
-driver and broadcasting is the correct Spark shape; it must never be a
-distributed read. ``resolve_bot_resources`` is pure on the parsed payload so it
-is unit-testable without HTTP; ``fetch_bots`` does the network call (gated
+This is a tiny driver-side dimension (dozens of bots): it is fetched and
+resolved on the driver, and must never be a distributed read.
+``resolve_bot_resources`` is pure on the parsed payload so it is
+unit-testable without HTTP; ``fetch_bots`` does the network call (gated
 import so the engine has no hard dependency on ``requests``/network).
 """
 
 from __future__ import annotations
 
 from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def resolve_bot_resources(bots_payload: Any, bot_name: str) -> list[str]:
@@ -46,12 +44,3 @@ def fetch_bots(bot_manager_url: str, timeout: float = 10.0) -> Any:
     except Exception:
         return {}
 
-
-def bot_resources_dim(spark: SparkSession, bots_payload: Any) -> DataFrame:
-    """The full bot dimension as a (broadcastable) DataFrame."""
-    rows = [
-        (str(rid), str(value.get("name")))
-        for rid, value in (bots_payload or {}).items()
-        if isinstance(value, dict) and "name" in value
-    ]
-    return spark.createDataFrame(rows or [], "resource_id string, bot_name string")

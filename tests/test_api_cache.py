@@ -7,7 +7,8 @@ import os
 import threading
 import time
 import uuid
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
+from pathlib import Path
 
 import pytest
 
@@ -76,29 +77,130 @@ def test_empty_request_leaves_no_file(service):
 #: Spark jobs of one non-empty E1 request on the fixture above. The version
 #: that ran a separate ``isEmpty()`` job before streaming measured 3 (the
 #: emptiness job, then the shuffle-map and result jobs of the XES stream);
-#: emptiness now comes from the stream's first trace, so it is 3 - 1.
+#: emptiness now comes from the stream's first trace, so it is 3 - 1. The
+#: fixture's ``createDataFrame`` has one partition per row (3), so trace
+#: assembly still needs an Exchange and its shuffle-map job.
 REQUEST_JOBS = 2
 
+#: The same request on a one-partition source (a one-file parquet table):
+#: the service coalesces the log to one partition, so trace assembly runs in
+#: the scan's task and there is no shuffle-map job.
+ONE_PARTITION_REQUEST_JOBS = 1
 
-def test_request_runs_no_separate_emptiness_job(spark, service):
+
+def _request_jobs(spark, request) -> tuple[int, str]:
+    """(Spark jobs run by ``request()``, its return value)."""
     sc = spark.sparkContext
     group = f"request-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "one E1 request")
     try:
-        path = service.resource("r1")
+        path = request()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == REQUEST_JOBS
+    return len(sc.statusTracker().getJobIdsForGroup(group)), path
+
+
+def test_request_runs_no_separate_emptiness_job(spark, service):
+    jobs, path = _request_jobs(spark, lambda: service.resource("r1"))
+    assert jobs == REQUEST_JOBS
     assert {t["attrs"]["concept:name"] for t in read_xes(path)} == {"c1"}
+
+
+@pytest.fixture()
+def parquet_service(spark, tmp_path):
+    """The fixture's rows as a one-file parquet table behind a service."""
+    path = str(tmp_path / "events")
+    spark.createDataFrame(ROWS, EVENTLOG_SCHEMA).coalesce(1).write.parquet(path)
+    events = spark.read.parquet(path)
+    return EventLogService(events=events, cache=ArtifactCache(str(tmp_path / "pq-cache"), ttl_seconds=3600))
+
+
+def test_one_partition_source_request_is_one_job(spark, service, parquet_service):
+    assert parquet_service.events.rdd.getNumPartitions() == 1
+    parquet_service.resource("r2")  # the first request plans the partition count
+    for ids, cases in ((["r1"], {"c1"}), (["r1", "r2"], {"c1", "c2"})):
+        jobs, path = _request_jobs(spark, lambda: parquet_service.resources(ids))
+        assert jobs == ONE_PARTITION_REQUEST_JOBS
+        traces = read_xes(path)
+        assert traces == read_xes(service.resources(ids))  # the 3-partition fixture's traces
+        assert {t["attrs"]["concept:name"]: len(t["events"]) for t in traces} == {c: CASE_EVENTS[c] for c in cases}
+
+
+def test_one_partition_request_plan_has_no_exchange_and_pushes_the_window(spark, parquet_service, monkeypatch):
+    from mobsos_event_log_generator_spark import api
+    from mobsos_event_log_generator_spark.sinks.xes import traces_to_xml
+
+    logs = []
+    stream = api.xes_trace_stream
+
+    def recording(log):
+        logs.append(log)
+        return stream(log)
+
+    monkeypatch.setattr(api, "xes_trace_stream", recording)
+    parquet_service.resource("r1", start_date=datetime(2024, 1, 1), end_date=datetime(2024, 1, 3))
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")  # untruncated PushedFilters
+    try:
+        xml = traces_to_xml(logs[-1]).select("xml")
+        assert len(xml.collect()) == 1
+        plan = xml._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    assert "Exchange" not in plan, plan
+    pushed = plan[plan.index("PushedFilters: ["):]
+    pushed = pushed[: pushed.index("]")]
+    assert "GreaterThanOrEqual(TIME_STAMP," in pushed and "LessThanOrEqual(TIME_STAMP," in pushed, pushed
+
+
+def _converter_window(start, end, ts_col):
+    """F5 as it was built through ``F.lit`` (PySpark's datetime converter)."""
+    from pyspark.sql import functions as F
+
+    pred = None
+    if start is not None:
+        pred = F.col(ts_col) >= F.lit(start)
+    if end is not None:
+        upper = F.col(ts_col) <= F.lit(end)
+        pred = upper if pred is None else pred & upper
+    return pred
+
+
+@pytest.mark.parametrize(
+    "window",
+    [
+        # naive bounds are process-local time, like the fixture's naive rows;
+        # each bound sits on an event's timestamp (the interval is closed)
+        {"start_date": datetime(2024, 1, 1, 10, 0, 5), "end_date": datetime(2024, 1, 2, 9, 0, 0)},
+        {"start_date": datetime(2024, 1, 1, 10, 0, 0).astimezone(timezone.utc)},
+        {"end_date": datetime(2024, 1, 1, 10, 0, 5).astimezone(timezone(timedelta(hours=-3)))},
+        {"start_date": "2024-01-01", "end_date": "2024-01-03"},
+        {"start_date": datetime(2024, 1, 1, 10, 0, 5), "end_date": "2024-01-03"},
+    ],
+    ids=["naive", "aware-utc", "aware-offset", "string", "mixed"],
+)
+def test_window_bounds_match_the_datetime_converter(spark, service, window, monkeypatch):
+    """The integer-micros F5 selects the rows, and writes the XES bytes, of
+    the ``F.lit(datetime)`` bounds it replaces."""
+    from mobsos_event_log_generator_spark.operators import filters as Fi
+    from mobsos_event_log_generator_spark.plans.eventlog import build_eventlog
+
+    params = service._params(["r1", "r2"], window.get("start_date"), window.get("end_date"), False, False, False)
+    got_rows = sorted(build_eventlog(service.events, params).collect())
+    got_xes = Path(service.resources(["r1", "r2"], **window)).read_bytes()
+    monkeypatch.setattr(Fi, "timestamp_between", _converter_window)
+    assert sorted(build_eventlog(service.events, params).collect()) == got_rows
+    assert Path(service.resources(["r1", "r2"], **window)).read_bytes() == got_xes
+    assert got_rows  # every window keeps at least one event
 
 
 #: py4j calls (Python -> JVM) from ``_generate`` through the first trace of
 #: a request whose flag signature was already served. Building the
 #: flag-dependent pipeline and the trace Columns anew took 718 calls for the
-#: request below; binding only F2/F5 to the memoized plan takes 179. The
-#: bound leaves about 1.5x headroom.
-REQUEST_PY4J_CALLS = 270
+#: request below; binding only F2/F5 to the memoized plan took 179, and
+#: parsing the two datetime bounds as one expression instead of Column
+#: algebra takes 107. The bound leaves about 1.5x headroom.
+REQUEST_PY4J_CALLS = 160
 
 
 def test_request_py4j_calls_bounded(spark, service, monkeypatch):
